@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.expr.{HammingDistance, VectorOps}
+import org.apache.spark.sql.graftshim.CatalystBridge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1306,7 +1307,18 @@ object Dedup {
     * The fixpoint is a forest of stars (every node points straight at
     * its component's minimum). Output contract identical to
     * [[connectedComponents]]; equivalence is spec-pinned on chains,
-    * cycles, and seeded random graphs. */
+    * cycles, and seeded random graphs.
+    *
+    * Driver finish: whenever the carried edge set (initially, or after
+    * any round) fits Spark's broadcast budget — `n` edges × 16 B ≤
+    * `spark.sql.autoBroadcastJoinThreshold`, `n` taken from the
+    * signature the checkpoint already observed — the rounds stop: the
+    * checkpointed edges are collected (one job over cached blocks),
+    * union-find with the minimum id as root builds the star forest on
+    * the driver, and the final node join broadcasts it as a local
+    * relation. A small graph skips every round (each costs ~7 jobs);
+    * a large one runs rounds until contraction brings it under the
+    * budget. `-1` disables the finish, as it disables broadcast joins. */
   def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 16): DataFrame = {
     // materialize the (possibly expensive) candidate-generation lineage
     // exactly ONCE — both the node set and the initial edge set read it,
@@ -1330,9 +1342,12 @@ object Dedup {
     var (e, prevSig) = sigCheckpoint(init
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct(), Seq("u", "v"))
+    val budget = CatalystBridge.sqlConf(edges.sparkSession).autoBroadcastJoinThreshold
+    def fitsDriver(n: Long) = budget >= 0 && n * 16 <= budget
+    var small = fitsDriver(prevSig._1)
     var rounds = 0
     var converged = false
-    while (!converged && rounds < maxRounds) {
+    while (!converged && !small && rounds < maxRounds) {
       // large-star: center x over BOTH directions; neighbors y > x link
       // to m = min(Γ(x) ∪ {x}); (y, m) keeps the high→low invariant
       val nbr = e.select(col("u").as("x"), col("v").as("y"))
@@ -1364,21 +1379,48 @@ object Dedup {
       // fixpoint test on the edge SET (both sides are distinct): compare
       // this round's signature to the carried one — control flow only
       converged = sig == prevSig
+      small = fitsDriver(sig._1)
       prevSig = sig
       e = relinked
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[ccstar] round $rounds sig=$sig converged=$converged")
     }
-    if (!converged)
+    if (!converged && !small)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxRounds rounds")
+    // a converged edge set already IS the star forest; otherwise the
+    // (small) edge set is finished on the driver
+    val stars = if (converged) e else {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      minRootStars(e.as[(Long, Long)].collect()).toDF("u", "v")
+    }
     // stars: every non-root points at its root; roots (and isolated
     // nodes never emitted as u) label themselves
-    nodes.join(e.select(col("u").as("node"), col("v").as("comp")), Seq("node"), "left")
+    nodes.join(stars.select(col("u").as("node"), col("v").as("comp")), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("comp"), col("node")).as("component"),
         (coalesce(col("comp"), col("node")) === col("node")).as("keep"))
+  }
+
+  /** Star forest of an edge list by union-find on the driver: every
+    * non-root node paired with its component's minimum id (the root —
+    * union always hangs the larger root under the smaller), i.e. the
+    * fixpoint [[connectedComponentsStar]]'s rounds converge to. */
+  private def minRootStars(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    for ((u, v) <- edges) {
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
+    // only non-roots are ever keys; find compresses each to its root
+    parent.keys.toSeq.map(x => (x, find(x)))
   }
 
   /** Random-hyperplane LSH candidate pairs with exact-cosine scores,

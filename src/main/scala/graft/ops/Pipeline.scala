@@ -207,8 +207,11 @@ object Pipeline {
         "oracle = DuckDB recursive CTE + the same argmax window. " +
         "Clustering here runs the alternating large-star/small-star " +
         "algorithm (diameter-independent O(log²) rounds — the web-scale " +
-        "path), while dedup_components runs min-label propagation: both " +
-        "declared, both oracle-checked, spec-pinned equivalent.",
+        "path) until the edge set fits Spark's broadcast budget " +
+        "(edges × 16 B ≤ spark.sql.autoBroadcastJoinThreshold), then " +
+        "finishes with union-find on the driver; dedup_components runs " +
+        "min-label propagation: both declared, both oracle-checked, " +
+        "spec-pinned equivalent.",
       (s, dir) => {
         val docs = Tables.t(s, dir, "documents").filter(col("doc_id") < 200)
         val stats = Dedup.ngramJaccardStats(docs, hotThreshold = 20)
@@ -259,8 +262,11 @@ object Pipeline {
         "oracle-checked: hyperplane-LSH buckets generate candidate " +
         "pairs (never all-pairs), exact cosine ≥ 0.4 verifies them, " +
         "connected components (large-star/small-star — the " +
-        "diameter-independent web-scale algorithm) groups transitive " +
-        "near-dups, and ONE survivor per group is kept (the min-id " +
+        "diameter-independent web-scale algorithm — rounds until the " +
+        "edge set fits the broadcast budget, edges × 16 B ≤ " +
+        "spark.sql.autoBroadcastJoinThreshold, then union-find on the " +
+        "driver) groups transitive near-dups, and ONE survivor per " +
+        "group is kept (the min-id " +
         "root). Unclustered vectors are their own survivor. Every " +
         "stage is engine-replayable: fixed-seed hyperplanes inlined as " +
         "double literals, the bit-identical fold cosine, and a " +

@@ -29,15 +29,22 @@ class DedupSpec extends SparkSpec {
       "exactly one survivor per component, the min node")
   }
 
+  private def triples(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
+
+  /** The broadcast budget connectedComponentsStar's driver finish reuses;
+    * at -1 every graph runs the distributed large-star/small-star rounds. */
+  private val bcast = "spark.sql.autoBroadcastJoinThreshold"
+
   test("connectedComponentsStar: matches label propagation on chains, cycles, random graphs") {
     import spark.implicits._
     def run(pairs: Seq[(Long, Long)], propIters: Int = 80): Unit = {
       val edges = pairs.toDF("src", "dst")
-      val star = Dedup.connectedComponentsStar(edges).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
-      val prop = Dedup.connectedComponents(edges, maxIters = propIters).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
-      assert(star.toSeq === prop.toSeq, s"divergence on ${pairs.take(8)}…")
+      val prop = triples(Dedup.connectedComponents(edges, maxIters = propIters))
+      assert(triples(Dedup.connectedComponentsStar(edges)) === prop,
+        s"driver finish: divergence on ${pairs.take(8)}…")
+      assert(withConf(bcast, "-1")(triples(Dedup.connectedComponentsStar(edges))) === prop,
+        s"distributed rounds: divergence on ${pairs.take(8)}…")
     }
     // triangle + tail, isolated pair, short chain
     run(Seq((2L, 1L), (2L, 3L), (10L, 11L), (11L, 12L), (10L, 12L),
@@ -61,9 +68,29 @@ class DedupSpec extends SparkSpec {
     // min-label propagation needs 29 rounds here; the alternating
     // algorithm's round count is O(log^2 n) — well under 16.
     val chain = (0L until 29L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = Dedup.connectedComponentsStar(chain).collect()
+    val got = withConf(bcast, "-1")(Dedup.connectedComponentsStar(chain).collect())
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert((0L to 29L).forall(got(_) == 0L), s"chain must collapse to 0: $got")
+  }
+
+  test("connectedComponentsStar: rounds hand over to the driver once contraction fits the budget") {
+    import spark.implicits._
+    // a 12-clique (66 edges) with an 8-edge tail: 74 edges initially,
+    // 19 after the first round, and 6 rounds to the fixpoint. A budget
+    // of 19 × 16 B admits the graph only after round 1.
+    val pairs = (for (i <- 0L until 12L; j <- i + 1 until 12L) yield (j, i)) ++
+      (11L until 19L).map(i => (i + 1, i))
+    val edges = pairs.toDF("src", "dst")
+    val prop = triples(Dedup.connectedComponents(edges))
+    withConf(bcast, (19 * 16).toString) {
+      assert(triples(Dedup.connectedComponentsStar(edges)) === prop)
+      // one round then the driver: only the hand-over finishes in 1 round
+      assert(triples(Dedup.connectedComponentsStar(edges, maxRounds = 1)) === prop)
+    }
+    // the distributed path still fails loudly when rounds run out
+    val err = intercept[IllegalStateException](
+      withConf(bcast, "-1")(Dedup.connectedComponentsStar(edges, maxRounds = 1)))
+    assert(err.getMessage.contains("did not converge"))
   }
 
   test("hamming_distance expression: eval + codegen paths agree with popcount") {

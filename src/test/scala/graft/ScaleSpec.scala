@@ -358,6 +358,14 @@ class ScaleSpec extends SparkSpec {
     // default mode: executor-local blocks, no external storage
     val local = Skew.cut(spark.range(10).toDF())
     assert(local.count() == 10)
+    // connectedComponentsStar on both its paths: the driver finish
+    // (default budget) and the distributed rounds (budget -1)
+    val starEdges = ((1L until 12L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (30L, 30L), (21L, 22L), (40L, 22L))).toDF("src", "dst")
+    def starBothPaths() = Seq("10MB", "-1").map(b => withConf("spark.sql.autoBroadcastJoinThreshold", b)(
+      Dedup.connectedComponentsStar(starEdges).collect().map(_.toString).sorted.toSeq))
+    val starLocal = starBothPaths()
+    assert(starLocal(0) == starLocal(1))
     // durable mode: same results, blocks written under the configured dir
     // (the fault-tolerance posture a 1000-executor run needs — losing an
     // executor mid-iteration must not kill the query)
@@ -375,6 +383,7 @@ class ScaleSpec extends SparkSpec {
       val comps = Dedup.connectedComponents(edges)
         .select("node", "component").as[(Long, Long)].collect().toMap
       assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
+      assert(starBothPaths() == starLocal, "reliable checkpoints changed the star answer")
     } finally spark.conf.unset("graft.checkpoint.dir")
   }
 

@@ -25,4 +25,12 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` with one session conf set, restoring the old value. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
