@@ -2,9 +2,9 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.expr.{HammingDistance, VectorOps}
-import org.apache.spark.sql.graftshim.CatalystBridge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
@@ -1310,15 +1310,23 @@ object Dedup {
     * cycles, and seeded random graphs.
     *
     * Driver finish: whenever the carried edge set (initially, or after
-    * any round) fits Spark's broadcast budget — `n` edges × 16 B ≤
+    * any round) fits Spark's broadcast budget — `n` edges × 24 B ≤
     * `spark.sql.autoBroadcastJoinThreshold`, `n` taken from the
     * signature the checkpoint already observed — the rounds stop: the
     * checkpointed edges are collected (one job over cached blocks),
     * union-find with the minimum id as root builds the star forest on
     * the driver, and the final node join broadcasts it as a local
-    * relation. A small graph skips every round (each costs ~7 jobs);
-    * a large one runs rounds until contraction brings it under the
-    * budget. `-1` disables the finish, as it disables broadcast joins. */
+    * relation. 24 B is the planner's own size estimate for a row of
+    * that relation (8 B row overhead + two longs), and the forest has
+    * at most `n` rows, so whenever the finish runs the join is planned
+    * as a broadcast (spec-pinned at the boundary). `-1` disables the
+    * finish, as it disables broadcast joins.
+    *
+    * Measured: a small graph skips every round (each costs ~7 jobs) —
+    * perfbench `corpus_prep`'s ~32-edge graph. Not measured: graphs
+    * above the budget, the hand-over after contraction, and where the
+    * finish stops paying — the budget is borrowed from broadcast joins,
+    * not tuned for this crossover. */
   def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 16): DataFrame = {
     // materialize the (possibly expensive) candidate-generation lineage
     // exactly ONCE — both the node set and the initial edge set read it,
@@ -1342,8 +1350,10 @@ object Dedup {
     var (e, prevSig) = sigCheckpoint(init
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct(), Seq("u", "v"))
-    val budget = CatalystBridge.sqlConf(edges.sparkSession).autoBroadcastJoinThreshold
-    def fitsDriver(n: Long) = budget >= 0 && n * 16 <= budget
+    val budget = SQLConf.get.autoBroadcastJoinThreshold
+    // LocalRelation's size estimate per (u, v) row, the figure the
+    // planner compares against the same budget for the final join
+    def fitsDriver(n: Long) = budget >= 0 && n * 24 <= budget
     var small = fitsDriver(prevSig._1)
     var rounds = 0
     var converged = false

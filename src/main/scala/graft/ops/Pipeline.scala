@@ -208,7 +208,7 @@ object Pipeline {
         "Clustering here runs the alternating large-star/small-star " +
         "algorithm (diameter-independent O(log²) rounds — the web-scale " +
         "path) until the edge set fits Spark's broadcast budget " +
-        "(edges × 16 B ≤ spark.sql.autoBroadcastJoinThreshold), then " +
+        "(edges × 24 B ≤ spark.sql.autoBroadcastJoinThreshold), then " +
         "finishes with union-find on the driver; dedup_components runs " +
         "min-label propagation: both declared, both oracle-checked, " +
         "spec-pinned equivalent.",
@@ -263,7 +263,7 @@ object Pipeline {
         "pairs (never all-pairs), exact cosine ≥ 0.4 verifies them, " +
         "connected components (large-star/small-star — the " +
         "diameter-independent web-scale algorithm — rounds until the " +
-        "edge set fits the broadcast budget, edges × 16 B ≤ " +
+        "edge set fits the broadcast budget, edges × 24 B ≤ " +
         "spark.sql.autoBroadcastJoinThreshold, then union-find on the " +
         "driver) groups transitive near-dups, and ONE survivor per " +
         "group is kept (the min-id " +

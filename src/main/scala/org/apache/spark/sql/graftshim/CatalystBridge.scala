@@ -33,12 +33,6 @@ object CatalystBridge {
   def waitForListeners(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** The session's typed SQL conf — byte-size entries such as
-    * `spark.sql.autoBroadcastJoinThreshold` come back parsed exactly as
-    * the planner reads them. */
-  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
-
   /** Imperative twin of SparkSessionExtensions.injectFunction for an
     * already-running session (the extensions path only applies at
     * session build time). */

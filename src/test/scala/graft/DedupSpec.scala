@@ -77,20 +77,28 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // a 12-clique (66 edges) with an 8-edge tail: 74 edges initially,
     // 19 after the first round, and 6 rounds to the fixpoint. A budget
-    // of 19 × 16 B admits the graph only after round 1.
+    // of exactly 19 × 24 B admits the graph only after round 1.
     val pairs = (for (i <- 0L until 12L; j <- i + 1 until 12L) yield (j, i)) ++
       (11L until 19L).map(i => (i + 1, i))
     val edges = pairs.toDF("src", "dst")
     val prop = triples(Dedup.connectedComponents(edges))
-    withConf(bcast, (19 * 16).toString) {
+    withConf(bcast, (19 * 24).toString) {
       assert(triples(Dedup.connectedComponentsStar(edges)) === prop)
-      // one round then the driver: only the hand-over finishes in 1 round
-      assert(triples(Dedup.connectedComponentsStar(edges, maxRounds = 1)) === prop)
+      // one round then the driver: only the hand-over finishes in 1 round,
+      // and its 19-row star relation is still planned as a broadcast
+      val cc = Dedup.connectedComponentsStar(edges, maxRounds = 1)
+      assert(triples(cc) === prop)
+      val plan = cc.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+        plan.take(1500))
     }
-    // the distributed path still fails loudly when rounds run out
-    val err = intercept[IllegalStateException](
-      withConf(bcast, "-1")(Dedup.connectedComponentsStar(edges, maxRounds = 1)))
-    assert(err.getMessage.contains("did not converge"))
+    // one byte under the boundary, and -1: the distributed path still
+    // fails loudly when rounds run out
+    for (b <- Seq(19 * 24 - 1, -1)) {
+      val err = intercept[IllegalStateException](
+        withConf(bcast, b.toString)(Dedup.connectedComponentsStar(edges, maxRounds = 1)))
+      assert(err.getMessage.contains("did not converge"), s"budget $b")
+    }
   }
 
   test("hamming_distance expression: eval + codegen paths agree with popcount") {
