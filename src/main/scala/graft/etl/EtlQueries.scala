@@ -724,6 +724,9 @@ object EtlQueries {
         "check: parquet-mr's own RowGroupFilter consults it on the " +
         "connector's existing FilterCompat read path (DocStoreSpec " +
         "proves the skip A/B with every other pruning tier disabled). " +
+        "Each filter is sized to its row group's keys (~10 bits per " +
+        "key at 1 % fpp, capped at 1 MiB), so the 16 KB row groups " +
+        "here (~1k keys each) carry 2 KiB filters, not 1 MiB each. " +
         "The lookup itself is oracle-exact.",
       (s, dir) => {
         val store = graft.Scratch.once(s"etl_connector_bloom:$dir") { p =>

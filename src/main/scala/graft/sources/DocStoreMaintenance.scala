@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -264,7 +266,17 @@ object DocStoreMaintenance {
     val w1 = if (partKeys.nonEmpty) w0.option("partitionBy", partKeys.mkString(",")) else w0
     val w2 = if (sortBy.nonEmpty) w1.option("sortBy", sortBy.mkString(",")) else w1
     val w3 = rowGroupBytes.fold(w2)(n => w2.option("rowGroupBytes", n.toString))
-    w3.mode("append").save()
+    // keep the bloom index: every data column that carries a filter in
+    // any input file's footer gets one in the rewrite, so point lookups
+    // keep the skip the appends paid for
+    val bloomed = bins.flatMap(_._2).flatMap { case (f, _) =>
+      DocStore.footerBlocks(f).flatMap(_.getColumns.asScala
+        .filter(_.getBloomFilterOffset >= 0).map(_.getPath.toDotString))
+    }.toSet
+    val bloomFor = all.schema.fieldNames
+      .filter(c => bloomed(c) && !partKeys.contains(c))
+    val w4 = if (bloomFor.nonEmpty) w3.option("bloomFor", bloomFor.mkString(",")) else w3
+    w4.mode("append").save()
 
     // publish: staged rel → store rel under a compaction-unique name
     // (visible-NAMED but, on a snapshot store, invisible until the

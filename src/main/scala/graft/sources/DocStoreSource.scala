@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
+import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader, ParquetWriter}
@@ -2146,11 +2148,14 @@ class DocStoreWriteBuilder(path: String, info: LogicalWriteInfo,
         DocStoreUpsertStreamingWrite(path, writeSchema,
           partPos.map(i => writeSchema.fields(i).name),
           info.queryId(), keys, DocStore.rowGroupBytesOf(info.options()))
-      } else
-        DocStoreStreamingWrite(path, writeSchema,
-          partPos.map(i => writeSchema.fields(i).name),
+      } else {
+        val partCols = partPos.map(i => writeSchema.fields(i).name)
+        DocStoreStreamingWrite(path, writeSchema, partCols,
           info.queryId(), DocStore.rowGroupBytesOf(info.options()),
-          snapshots = info.options().getBoolean("snapshots", false))
+          snapshots = info.options().getBoolean("snapshots", false),
+          bloomFor = DocStore.resolveBloomFor(
+            DocStore.bloomForOf(info.options()), writeSchema, partCols))
+      }
     }
 
     override def description(): String = s"DocStoreWrite path=$path"
@@ -2177,7 +2182,8 @@ case class DocStoreStreamingWrite(
     partitionBy: Seq[String],
     queryId: String,
     rowGroupBytes: Option[Long] = None,
-    snapshots: Boolean = false) extends StreamingWrite {
+    snapshots: Boolean = false,
+    bloomFor: Seq[String] = Nil) extends StreamingWrite {
 
   private def staging(epochId: Long) = s"$path/_staging-$queryId-epoch-$epochId"
   private def marker(epochId: Long) = new Path(path, s"_committed-$queryId-$epochId")
@@ -2185,7 +2191,7 @@ case class DocStoreStreamingWrite(
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     DocStoreStreamingWriterFactory(path, queryId, schema, partitionBy,
-      rowGroupBytes)
+      rowGroupBytes, bloomFor)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val conf = DocStore.hadoopConf
@@ -2236,12 +2242,13 @@ case class DocStoreStreamingWriterFactory(
     queryId: String,
     schema: StructType,
     partitionBy: Seq[String],
-    rowGroupBytes: Option[Long] = None) extends StreamingDataWriterFactory {
+    rowGroupBytes: Option[Long] = None,
+    bloomFor: Seq[String] = Nil) extends StreamingDataWriterFactory {
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new DocStoreDataWriter(s"$path/_staging-$queryId-epoch-$epochId",
       schema, partitionBy, partitionId, taskId, rowGroupBytes,
-      fileSuffix = Some(s"-e$epochId"))
+      fileSuffix = Some(s"-e$epochId"), bloomFor = bloomFor)
 }
 
 /** STREAMING UPSERT sink — `writeStream.format("docstore")
@@ -2930,8 +2937,13 @@ class DocStoreDataWriter(
       // read-back range predicates prune at row-group granularity
       // (and split planning fans one file out across tasks)
       rowGroupBytes.foreach(n => b.withRowGroupSize(n))
-      bloomFor.filter(c => dataFields.exists(_._2.name == c))
-        .foreach(c => b.withBloomFilterEnabled(c, true))
+      // adaptive bloom sizing: each row group's filter is the smallest
+      // power-of-two candidate whose capacity at the default fpp holds
+      // the keys it saw (see [[DocStore.bloomForOf]])
+      bloomFor.filter(c => dataFields.exists(_._2.name == c)).foreach { c =>
+        b.withBloomFilterEnabled(c, true).withAdaptiveBloomFilterEnabled(true)
+          .withBloomFilterCandidateNumber(c, DocStore.BloomCandidates)
+      }
       b.build()
     })
 
@@ -3098,10 +3110,34 @@ object DocStore {
     * at 100 TB `WHERE key = x` reads every data page. A bloom filter
     * per row group turns that into a footer-and-bitset check:
     * parquet-mr's own RowGroupFilter consults it on the read path (the
-    * reader's FilterCompat predicate), no reader changes needed. */
+    * reader's FilterCompat predicate), no reader changes needed.
+    *
+    * SIZING: the writer sees rows as a stream, so no NDV is known up
+    * front. Parquet's adaptive filter keeps [[BloomCandidates]]
+    * power-of-two candidate bitsets per open row group — the 1 MiB cap
+    * (`ParquetProperties.DEFAULT_MAX_BLOOM_FILTER_BYTES`) halving down
+    * to its smallest useful size — drops each candidate once the
+    * distinct count passes its capacity at the default 1 % fpp, and
+    * writes the smallest one left. A filter therefore costs about
+    * 10 bits per distinct key of its row group (a few hundred keys →
+    * ~1 KiB), never more than the 1 MiB cap; a fixed-size filter would
+    * cost the full 1 MiB per row group however few keys it held. The
+    * price is transient memory: the candidates together take up to
+    * ~2 MiB (instead of 1 MiB) per bloom column per open writer, freed
+    * when the row group flushes. The batch sink, the streaming append
+    * sink and compaction (which re-applies the filters its input
+    * files carry) all write filters sized this way. */
   def bloomForOf(options: CaseInsensitiveStringMap): Seq[String] =
     Option(options.get("bloomFor")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+
+  /** Adaptive bloom candidates per column: one per power-of-two size
+    * from the 1 MiB cap down to the 32 B floor of a split-block filter
+    * (16 sizes). Parquet skips the ones too small for its 500-key
+    * capacity step, so in practice the smallest filter is 1 KiB. */
+  val BloomCandidates: Int = Integer.numberOfTrailingZeros(
+    ParquetProperties.DEFAULT_MAX_BLOOM_FILTER_BYTES /
+      BlockSplitBloomFilter.LOWER_BOUND_BYTES) + 1
 
   /** Streaming-read options, parsed once at the scan boundary:
     * admission control by files and/or whole-file bytes, the

@@ -28,6 +28,38 @@ class DocStoreSpec extends SparkSpec {
   private def physical(df: org.apache.spark.sql.DataFrame) =
     allNodes(df.queryExecution.executedPlan)
 
+  /** Bloom filter chunk metadata of column `c` in every row group of `file`. */
+  private def bloomChunks(file: String, c: String) = {
+    import scala.jdk.CollectionConverters._
+    DocStore.footerBlocks(file).map(_.getColumns.asScala
+      .find(_.getPath.toDotString == c).get)
+  }
+
+  /** Rows a raw parquet read of `file` materializes for `k = probe`
+    * with stats, dictionary, column-index and record-level filtering
+    * off: only the bloom bitset (when `bloom`) can skip a row group. */
+  private def rowsWithBloom(file: String, k: String, probe: Long,
+      bloom: Boolean): Long = {
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.setBoolean("parquet.filter.stats.enabled", false)
+    conf.setBoolean("parquet.filter.dictionary.enabled", false)
+    conf.setBoolean("parquet.filter.record-level.enabled", false)
+    conf.setBoolean("parquet.filter.columnindex.enabled", false)
+    conf.setBoolean("parquet.filter.bloom.enabled", bloom)
+    val r = ParquetReader.builder(new GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(file)).withConf(conf)
+      .withFilter(FilterCompat.get(
+        FilterApi.eq(FilterApi.longColumn(k), java.lang.Long.valueOf(probe))))
+      .build()
+    var n = 0L
+    while (r.read() != null) n += 1
+    r.close(); n
+  }
+
   private def docStoreScanOf(df: org.apache.spark.sql.DataFrame): DocStoreScan =
     physical(df).collectFirst {
       case b: BatchScanExec => b.scan
@@ -1142,17 +1174,31 @@ class DocStoreSpec extends SparkSpec {
       .write.format("docstore").option("path", a).mode("append").save()
     Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("k", "v").coalesce(1)
       .write.format("docstore").option("path", a).mode("append").save()
-    def drain(): Unit =
+    def drain(bloomFor: String = "K", to: String = b, ckpt: String = cp): Unit =
       spark.readStream.format("docstore").option("path", a)
         .option("maxFilesPerTrigger", "1").load()
-        .writeStream.format("docstore").option("path", b)
-        .option("checkpointLocation", cp)
+        .writeStream.format("docstore").option("path", to)
+        .option("checkpointLocation", ckpt).option("bloomFor", bloomFor)
         .trigger(Trigger.AvailableNow()).start().awaitTermination()
     drain()
     val rows = spark.read.format("docstore").option("path", b).load()
       .as[(Long, String)].collect().toSeq.sorted
     assert(rows == Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (5L, "e")),
       s"pipeline drifted: $rows")
+    // the sink honours bloomFor (resolved case-insensitively, like the
+    // batch sink): every epoch file carries a filter for k
+    val epochFiles = DocStore.listFiles(b)
+    assert(epochFiles.nonEmpty && epochFiles.forall(f =>
+      bloomChunks(f, "k").forall(_.getBloomFilterOffset >= 0)),
+      s"streaming epoch files without a bloom filter for k: $epochFiles")
+    // …and a misspelled column fails the query instead of silently
+    // writing no filter
+    val typo = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      drain(bloomFor = "kk", to = tmpDir("docstore_pipe_typo"),
+        ckpt = tmpDir("docstore_pipe_typo_cp")))
+    assert(Iterator.iterate[Throwable](typo)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("bloomFor column 'kk'")),
+      s"expected the unknown-bloomFor error, got: $typo")
     // one commit marker per epoch, invisible to listings
     val markers = new java.io.File(b).listFiles()
       .map(_.getName).filter(_.startsWith("_committed-"))
@@ -1366,10 +1412,6 @@ class DocStoreSpec extends SparkSpec {
 
   test("bloomFor writes per-row-group bloom filters; point lookups skip groups zone maps can't") {
     import spark.implicits._
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     // UNSORTED high-cardinality key with tight row groups: every
     // group's min/max straddles any probe, so zone maps prune nothing
     // — the exact case bloom filters exist for
@@ -1381,49 +1423,110 @@ class DocStoreSpec extends SparkSpec {
       .option("rowGroupBytes", "4096").option("bloomFor", "k")
       .mode("overwrite").save()
     val f = DocStore.listFiles(store).head
-    val blocks = DocStore.footerBlocks(f)
-    assert(blocks.size > 1, "tight rowGroupBytes must yield several groups")
-    import scala.jdk.CollectionConverters._
-    assert(blocks.forall(_.getColumns.asScala
-      .find(_.getPath.toDotString == "k").get.getBloomFilterOffset >= 0),
+    val blooms = bloomChunks(f, "k")
+    assert(blooms.size > 1, "tight rowGroupBytes must yield several groups")
+    assert(blooms.forall(_.getBloomFilterOffset >= 0),
       "every row group carries a bloom filter for k")
+    // sized to the few hundred keys each group holds, not the 1 MiB cap
+    assert(blooms.forall(c => c.getBloomFilterLength > 0 &&
+      c.getBloomFilterLength <= 4096),
+      s"bloom filters not sized to their row groups: " +
+        blooms.map(_.getBloomFilterLength).distinct.sorted)
     // control store without the option: no bloom
     val plain = tmpDir("docstore_nobloom")
     keys.map(k => (k, s"v$k")).toDF("k", "v").coalesce(1)
       .write.format("docstore").option("path", plain)
       .option("rowGroupBytes", "4096").mode("overwrite").save()
-    assert(DocStore.footerBlocks(DocStore.listFiles(plain).head)
-      .forall(_.getColumns.asScala
-        .find(_.getPath.toDotString == "k").get.getBloomFilterOffset < 0))
+    assert(bloomChunks(DocStore.listFiles(plain).head, "k")
+      .forall(_.getBloomFilterOffset < 0))
     // A/B proof the READ path's row-group skip comes from the bloom
     // bitset alone: stats/dictionary/record-level filtering all off,
     // probe a value inside every group's min/max but absent from the
     // data — bloom on: zero rows materialize; bloom off: every row does
     val absent = 1L // odd, never hits (k*2654435761 % 100000 is even)
     assert(keys.forall(_ != absent))
-    def rowsWithBloom(enabled: Boolean): Long = {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      conf.setBoolean("parquet.filter.stats.enabled", false)
-      conf.setBoolean("parquet.filter.dictionary.enabled", false)
-      conf.setBoolean("parquet.filter.record-level.enabled", false)
-      conf.setBoolean("parquet.filter.columnindex.enabled", false)
-      conf.setBoolean("parquet.filter.bloom.enabled", enabled)
-      val r = ParquetReader.builder(new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(f)).withConf(conf)
-        .withFilter(FilterCompat.get(
-          FilterApi.eq(FilterApi.longColumn("k"),
-            java.lang.Long.valueOf(absent))))
-        .build()
-      var n = 0L
-      while (r.read() != null) n += 1
-      r.close(); n
-    }
-    assert(rowsWithBloom(enabled = true) == 0L, "bloom skips every group")
-    assert(rowsWithBloom(enabled = false) == 4000L, "without bloom nothing prunes")
+    assert(rowsWithBloom(f, "k", absent, bloom = true) == 0L, "bloom skips every group")
+    assert(rowsWithBloom(f, "k", absent, bloom = false) == 4000L,
+      "without bloom nothing prunes")
     // and the connector read stays exact either way
     val hit = keys.head
     assert(spark.read.format("docstore").option("path", store).load()
       .filter(col("k") === hit).count() == keys.count(_ == hit))
+  }
+
+  test("bloomFor sizing holds the fpp on a large row group: 200k keys, <= 2% false positives") {
+    import spark.implicits._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    // one row group of 200k distinct EVEN keys: an adaptive filter that
+    // sized itself too small would show a false-positive rate far
+    // above the 1 % target on odd (absent) probes
+    val store = tmpDir("docstore_bloom_large")
+    val n = 200000L
+    spark.range(n).select((col("id") * 2).as("k")).coalesce(1)
+      .write.format("docstore").option("path", store)
+      .option("bloomFor", "k").mode("overwrite").save()
+    val f = DocStore.listFiles(store).head
+    val chunks = bloomChunks(f, "k")
+    assert(chunks.size == 1, s"expected one row group, got ${chunks.size}")
+    val chunk = chunks.head
+    assert(chunk.getBloomFilterLength > 0 &&
+      chunk.getBloomFilterLength <= (1 << 20) + 64,
+      s"bloom length ${chunk.getBloomFilterLength} above the 1 MiB cap")
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f), DocStore.hadoopConf))
+    val bloom = try r.readBloomFilter(chunk) finally r.close()
+    assert(bloom.getBitsetSize <= (1 << 20))
+    // every present key hits (no false negatives)…
+    assert((0L until n by 997L).forall(i =>
+      bloom.findHash(bloom.hash(java.lang.Long.valueOf(i * 2)))))
+    // …and 100k absent odd keys are rejected at the target rate
+    val probes = 100000
+    val fp = (0 until probes).count(i =>
+      bloom.findHash(bloom.hash(java.lang.Long.valueOf(2L * i + 1))))
+    assert(fp.toDouble / probes <= 0.02,
+      s"false-positive rate ${fp.toDouble / probes} with a " +
+        s"${bloom.getBitsetSize} B bitset for $n keys")
+    assert(spark.read.format("docstore").option("path", store).load()
+      .filter(col("k") === 2 * 4321L).count() == 1L)
+  }
+
+  test("compaction keeps the bloom index of its inputs; answers unchanged") {
+    import spark.implicits._
+    val store = tmpDir("docstore_bloom_compact")
+    // 3 small appends x 2 partitions = 3 files per partition, all with
+    // a bloom filter on k (unsorted, so zone maps cannot prune)
+    (0 until 3).foreach { b =>
+      (0L until 600L).map(i => ((i * 2654435761L + b) % 100000L) * 2)
+        .map(k => (k, s"v$k", s"p${k / 2 % 2}")).toDF("k", "v", "p")
+        .coalesce(1)
+        .write.format("docstore").option("path", store)
+        .option("partitionBy", "p").option("bloomFor", "k")
+        .mode("append").save()
+    }
+    def answer() = spark.read.format("docstore").option("path", store).load()
+      .as[(Long, String, String)].collect().toSeq.sorted
+    val before = answer()
+    assert(DocStore.listFiles(store).size == 6)
+    val st = graft.sources.DocStoreMaintenance.compact(spark, store,
+      rowGroupBytes = Some(4096L))
+    assert(st.filesIn == 6 && st.filesOut == 2, s"compaction: $st")
+    assert(answer() == before, "compaction changed the answer")
+    val files = DocStore.listFiles(store)
+    assert(files.size == 2 && files.forall(_.contains("compact-")))
+    val absent = 1L // odd: every key is even
+    files.foreach { f =>
+      val blooms = bloomChunks(f, "k")
+      assert(blooms.size > 1, "tight rowGroupBytes must yield several groups")
+      assert(blooms.forall(_.getBloomFilterOffset >= 0),
+        s"compacted row group without a bloom filter for k in $f")
+      assert(rowsWithBloom(f, "k", absent, bloom = true) == 0L,
+        "bloom skips every compacted group")
+      assert(rowsWithBloom(f, "k", absent, bloom = false) > 0L)
+    }
+    val hit = before.head._1
+    assert(spark.read.format("docstore").option("path", store).load()
+      .filter(col("k") === hit).count() == before.count(_._1 == hit))
   }
 
   // ---- aggregate pushdown (r13) ----
