@@ -10,27 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // storage-partitioned joins for key-grouped docstore scans: set
-      // from process start so plan shapes never depend on which query
-      // was constructed first (etl_connector_copartition also sets it
-      // for foreign sessions)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // recursive-CTE working sets scale with the table (the sf1 audit
-      // tripped the 1M default on a log2(N)-depth walk over 50k docs);
-      // the limit is a runaway guard, not a capacity plan - size it for
-      // the data like any production session would
-      .config("spark.sql.cteRecursionRowLimit", "100000000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // Steady-state measurement: best of two runs per query. This VM
     // shows sporadic multi-second stalls unrelated to the plans (same
@@ -38,10 +18,8 @@ object Bench {
     // the noise.
     // Local-iteration filter (builder only; the driver sets no filter →
     // full run): comma/space-separated name substrings.
-    val filters = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split("[,\\s]+").filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      filters.isEmpty || filters.exists(n.contains) }
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_FILTER")
+      .map(_.split("[,\\s]+").filter(_.nonEmpty).toSeq).getOrElse(Nil))
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 } catch {
@@ -82,7 +60,7 @@ object Bench {
     val singleRun = sys.env.get("SPARK_GRAFT_BENCH_RUNS").contains("1")
     val rerun = !sys.env.contains("SPARK_GRAFT_BENCH_NO_RERUN")
     // pass 1: the measurement sweep
-    val firstPass = selected.toSeq.map { case (name, fn) =>
+    val firstPass = selected.map { case (name, fn) =>
       val a = once(name, fn)
       val b = if (singleRun) a else once(name, fn)
       cleanup()

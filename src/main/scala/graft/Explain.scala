@@ -1,38 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: `runMain graft.Explain <sfDir> <query> [n]` — prints the
-  * formatted physical plan of a declared query and times n count() runs
-  * (first = cold, rest = warm). */
+/** Dev tool: `runMain graft.Explain <sfDir> [substrings] [n]`. For each
+  * query whose name contains one of the comma-separated substrings
+  * (default: every query) it prints the formatted physical plan, one
+  * `[<name>] plan:` line of operator counts in that plan, and the time
+  * of n count() runs (default 3; first = cold, rest = warm; 0 = plan
+  * only). The count lines of two checkouts diff to a plan-shape change. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 1) args(1).split(",").toSeq else SparkEntry.queries.keys.toSeq
-    val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // storage-partitioned joins for key-grouped docstore scans: set
-      // from process start so plan shapes never depend on which query
-      // was constructed first (etl_connector_copartition also sets it
-      // for foreign sessions)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // recursive-CTE working sets scale with the table (the sf1 audit
-      // tripped the 1M default on a log2(N)-depth walk over 50k docs);
-      // the limit is a runaway guard, not a capacity plan - size it for
-      // the data like any production session would
-      .config("spark.sql.cteRecursionRowLimit", "100000000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    val filters = args.lift(1).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+    val n = args.lift(2).fold(3)(_.toInt)
+    val spark = Session.build()
+    SparkEntry.select(filters).foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
       println(s"===== $name =====")
       df.explain("formatted")
+      println(s"[$name] plan: ${shape(df.queryExecution.executedPlan.toString)}")
       (1 to n).foreach { i =>
         val t0 = System.nanoTime()
         val c = df.count()
@@ -41,4 +25,16 @@ object Explain {
     }
     spark.stop()
   }
+
+  /** Occurrences, in a physical plan's text, of: exchanges (shuffle,
+    * broadcast and reused), reused exchanges, broadcast-hash, sort-merge
+    * and nested-loop joins, windows, scans, and BandJoinRule's bucket
+    * column. Before execution an adaptive plan shows its initial form. */
+  def shape(plan: String): String = Seq(
+      "exch" -> "Exchange ", "reuse" -> "ReusedExchange",
+      "bhj" -> "BroadcastHashJoin", "smj" -> "SortMergeJoin",
+      "nlj" -> "NestedLoop", "win" -> "Window ", "scans" -> "Scan ",
+      "band" -> "__band_bucket")
+    .map { case (k, s) => s"$k=${plan.split(java.util.regex.Pattern.quote(s), -1).length - 1}" }
+    .mkString(" ")
 }

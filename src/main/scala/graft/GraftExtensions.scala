@@ -1,24 +1,28 @@
 package graft
 
 import graft.expr.{HammingDistance, KllMergeAgg, KllQuantile, KllSketchAgg, MinHashSig, ThetaANotB, ThetaEstimate, ThetaIntersect, ThetaSketchAgg, ThetaUnionAgg, VecDot}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftshim.CatalystBridge
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions so `spark.sql("... vec_dot(a, b) ...")`
-  * works next to the Column API. Install with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` at session
-  * build time, or [[GraftExtensions.register]] on a live session.
+/** SparkSessionExtensions entry point, installed at session build with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (as
+  * [[Session.build]] does). It injects:
+  *   - the engine's native expressions as SQL functions, so
+  *     `spark.sql("... vec_dot(a, b) ...")` works next to the Column API;
+  *   - [[graft.plans.BandJoinRule]], which rewrites pure band joins to a
+  *     bucketed equi-join;
+  *   - [[graft.plans.AsOfJoinStrategy]], which plans the as-of join node.
   *
-  * This is the SURVEY §4 extension-point wiring (injectFunction); the
-  * engine needs no custom planner rules — every declared operator lowers
-  * to stock Catalyst plans, which is the point of being Spark-first. */
+  * Catalyst applies extensions only when a session is built, so a
+  * session built without them has none of the three. To plan one query
+  * without the band rule, set `spark.sql.optimizer.excludedRules` to
+  * `BandJoinRule.ruleName`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => graft.plans.BandJoinRule)
+    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }
 
@@ -109,10 +113,4 @@ object GraftExtensions {
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
   }
-
-  /** Imperative registration on an already-running session. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (id, info, b) =>
-      CatalystBridge.registerFunction(spark, id, info, b)
-    }
 }

@@ -53,6 +53,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ListMap(all.map(q => q.name -> q.fn): _*)
 
+  /** Queries whose name contains any of `filters`, in registry order;
+    * an empty filter selects every query. */
+  def select(filters: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.filter { case (n, _) => filters.isEmpty || filters.exists(n.contains) }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (driver records a weaker rows-only check; ScalaTest covers them). */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,36 +9,13 @@ object Verify {
     // driver always passes exactly two args → full run).
     val sfDir = args(0)
     val outDir = args(1)
-    val filters = args.drop(2)
-    def selected(name: String): Boolean =
-      filters.isEmpty || filters.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // storage-partitioned joins for key-grouped docstore scans: set
-      // from process start so plan shapes never depend on which query
-      // was constructed first (etl_connector_copartition also sets it
-      // for foreign sessions)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // recursive-CTE working sets scale with the table (the sf1 audit
-      // tripped the 1M default on a log2(N)-depth walk over 50k docs);
-      // the limit is a runaway guard, not a capacity plan - size it for
-      // the data like any production session would
-      .config("spark.sql.cteRecursionRowLimit", "100000000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(args.drop(2).toSeq)
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
-    // events.ts needs the ns-as-long reader flag (see Tables.t); set it
-    // up-front so concurrent query threads never race the first setter.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Queries are independent writes to distinct dirs — run them on a
     // small pool; Spark's scheduler interleaves the jobs.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val tasks = SparkEntry.queries.toSeq.filter(t => selected(t._1)).map { case (name, fn) =>
+    val tasks = selected.map { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit = {
           val t0 = System.nanoTime()
@@ -69,7 +45,8 @@ object Verify {
     } + "\""
     // Same selection as the parquet dumps: a filtered local run must be
     // self-consistent (oracle entries only for queries that have output).
-    val json = SparkEntry.oracleSql.filter(t => selected(t._1))
+    val names = selected.map(_._1).toSet
+    val json = SparkEntry.oracleSql.filter(t => names(t._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,21 +1,20 @@
 package graft.ops
 
-import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.AsOfJoin
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.CatalystBridge
 
 /** User-facing as-of join API over the custom operator stack
-  * ([[graft.plans.AsOfJoin]] logical node → [[AsOfJoinStrategy]] →
+  * ([[graft.plans.AsOfJoin]] logical node → [[graft.plans.AsOfJoinStrategy]] →
   * AsOfJoinExec merge). Column arguments are names, resolved against
   * each side's analyzed plan (the sides keep distinct attribute ids, so
   * duplicate names across sides are fine — project/rename beforehand if
-  * you need both in the output). */
+  * you need both in the output).
+  *
+  * The strategy comes from [[graft.GraftExtensions]] at session build; on
+  * a session built without the extensions the join fails at planning
+  * with Spark's "No plan for AsOfJoin". */
 object AsOf {
-
-  def ensureStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
 
   /** Left-outer as-of join: each left row gets the right row with the
     * greatest rightTime <= leftTime within the same key (direction
@@ -31,8 +30,6 @@ object AsOf {
       rightTime: String,
       direction: String = "backward",
       tolerance: Option[Long] = None): DataFrame = {
-    val spark = left.sparkSession
-    ensureStrategy(spark)
     val lp = CatalystBridge.analyzed(left)
     val rp = CatalystBridge.analyzed(right)
     def resolve(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, name: String) =
@@ -72,7 +69,7 @@ object AsOf {
         s"type (timestamp/date/integer), got ${lt.dataType.simpleString}")
       tolerance.foreach(t => check(t >= 0, s"tolerance must be >= 0, got $t"))
     }
-    CatalystBridge.ofRows(spark,
+    CatalystBridge.ofRows(left.sparkSession,
       AsOfJoin(lp, rp, lk, rk, lt, rt, direction, tolerance))
   }
 }

@@ -378,14 +378,13 @@ object Relational {
     Q(
       "join_range_band",
       "Pure non-equi band join, planned through the engine's " +
-        "BandJoinRule (installed on the session here): the O(|L|·|R|) " +
+        "BandJoinRule (injected by GraftExtensions at session build): the O(|L|·|R|) " +
         "nested loop Spark would pick is rewritten to a bucketed " +
         "equi-join on floor(value/width) — 5|L|+|R| rows through a hash " +
         "join, the shape that survives 100 TB. Results are identical to " +
         "the nested loop (the rule re-verifies the exact band " +
         "condition); ScaleSpec pins the no-BNLJ plan at realistic |R|.",
       (s, dir) => {
-        graft.plans.BandJoinRule.ensureRule(s)
         val su = broadcast(Tables.t(s, dir, "supplier"))
         val p = Tables.t(s, dir, "part")
         p.join(su, col("p_retailprice").between(col("s_acctbal") - 500, col("s_acctbal") + 500))

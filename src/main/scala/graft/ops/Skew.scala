@@ -54,8 +54,8 @@ object Skew {
     * deploys should either start the session with
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (the
     * ContextCleaner then deletes each round's files once its RDD is
-    * garbage-collected — a context-build-time conf, which this repo's
-    * Bench/Verify/Explain mains all set) or point the dir at storage
+    * garbage-collected — a context-build-time conf, which
+    * [[graft.Session]] sets) or point the dir at storage
     * with a TTL/lifecycle rule. Local default mode has neither
     * concern: localCheckpoint blocks die with the executors. */
   def cut(df: DataFrame): DataFrame =

@@ -36,24 +36,15 @@ import org.apache.spark.sql.types._
   * equi conjunct, so the rule can't match its own output (idempotent
   * under AQE re-optimization).
   *
-  * Install: `spark.experimental.extraOptimizations` on a live session or
-  * `graft.GraftExtensions` (injectOptimizerRule) at build time.
+  * Install: `graft.GraftExtensions` injects it at session build. A
+  * stock-plan baseline excludes it per query with
+  * `spark.sql.optimizer.excludedRules` = [[ruleName]].
   *
   * Measured (local[32], lineitem sf0.1 600k × supplier 1000, band ±50):
   * stock nested-loop 6.8s → bucketed 1.1-1.3s, identical results; the
   * ratio scales with |R| (nested-loop is |L|·|R|, this is 3|L|+|R|).
   */
 object BandJoinRule extends Rule[LogicalPlan] {
-
-  /** Idempotent installation on a live session (the extensions path
-    * only applies at session build time). The rule is semantics-
-    * preserving and self-guarding (its output has an equi conjunct, so
-    * it can never match its own rewrite), so leaving it installed
-    * session-wide is safe. */
-  def ensureRule(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(BandJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BandJoinRule
 
   private def unwrapLit(e: Expression): Option[Double] = e match {
     case Literal(v: Number, _: NumericType) => Some(v.doubleValue())

@@ -32,15 +32,4 @@ object CatalystBridge {
     * (`listenerBus.waitUntilEmpty` is private[spark]). */
   def waitForListeners(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  /** Imperative twin of SparkSessionExtensions.injectFunction for an
-    * already-running session (the extensions path only applies at
-    * session build time). */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      id: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(id, info, builder)
 }

@@ -16,20 +16,8 @@ class BandJoinSpec extends SparkSpec {
       .orderBy("s_suppkey")
   }
 
-  // The declared join_range_band query installs the rule session-wide
-  // (BandJoinRule.ensureRule), so both directions save/restore instead
-  // of assuming a pristine session.
-  private def withRule[T](f: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Seq(BandJoinRule)
-    try f finally spark.experimental.extraOptimizations = saved
-  }
-
-  private def withoutRule[T](f: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Nil
-    try f finally spark.experimental.extraOptimizations = saved
-  }
+  private def withoutRule[T](f: => T): T =
+    withConf("spark.sql.optimizer.excludedRules", BandJoinRule.ruleName)(f)
 
   test("rewrites pure band join to a bucketed equi-join with same results") {
     val (basePlan, expected) = withoutRule {
@@ -38,14 +26,12 @@ class BandJoinSpec extends SparkSpec {
     }
     assert(basePlan.contains("NestedLoop"), s"expected nested-loop baseline:\n$basePlan")
 
-    withRule {
-      val rewritten = bandQuery()
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert(!plan.contains("NestedLoop"), s"rule did not fire:\n$plan")
-      assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
-        s"expected an equi join:\n$plan")
-      assert(rewritten.collect().toSeq == expected)
-    }
+    val rewritten = bandQuery()
+    val plan = rewritten.queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoop"), s"rule did not fire:\n$plan")
+    assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
+      s"expected an equi join:\n$plan")
+    assert(rewritten.collect().toSeq == expected)
   }
 
   test("null band values never match, with and without the rule") {
@@ -56,20 +42,18 @@ class BandJoinSpec extends SparkSpec {
       .toDF("rid", "rv")
     def q() = l.join(r, col("lv").between(col("rv") - 5, col("rv") + 5))
       .select("lid", "rid").orderBy("lid", "rid")
-    val expected = q().collect().toSeq
+    val expected = withoutRule(q().collect().toSeq)
     assert(expected.map(row => (row.getLong(0), row.getLong(1))) == Seq((1L, 10L)))
-    withRule(assert(q().collect().toSeq == expected))
+    assert(q().collect().toSeq == expected)
   }
 
   test("joins with an equi conjunct are left untouched") {
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    withRule {
-      val j = li.join(o, col("l_orderkey") === col("o_orderkey") &&
-        col("l_shipdate") >= col("o_orderdate"))
-      assert(!j.queryExecution.optimizedPlan.toString.contains("__band_bucket"))
-      assert(j.count() > 0)
-    }
+    val j = li.join(o, col("l_orderkey") === col("o_orderkey") &&
+      col("l_shipdate") >= col("o_orderdate"))
+    assert(!j.queryExecution.optimizedPlan.toString.contains("__band_bucket"))
+    assert(j.count() > 0)
   }
 
   test("asymmetric widths use the max (covers the wider side)") {
@@ -79,8 +63,8 @@ class BandJoinSpec extends SparkSpec {
     // lv >= rv - 60 AND lv <= rv + 50  ⇔  lv ∈ [40, 150]
     def q() = l.join(r, col("lv") >= col("rv") - 60 && col("lv") <= col("rv") + 50)
       .select("lv").orderBy("lv")
-    val expected = q().collect().map(_.getDouble(0)).toSeq
+    val expected = withoutRule(q().collect().map(_.getDouble(0)).toSeq)
     assert(expected == Seq(100.0, 149.0))
-    withRule(assert(q().collect().map(_.getDouble(0)).toSeq == expected))
+    assert(q().collect().map(_.getDouble(0)).toSeq == expected)
   }
 }

@@ -1343,40 +1343,36 @@ class DocStoreSpec extends SparkSpec {
     o.select("o_orderkey", "o_custkey", "o_year")
       .write.format("docstore").option("path", b)
       .option("partitionBy", "o_year").mode("overwrite").save()
-    val prev = spark.conf.get("spark.sql.sources.v2.bucketing.enabled")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try {
-      // sum() is not footer-answerable, so this aggregation stays a
-      // real scan and keeps its KeyGroupedPartitioning — a count-only
-      // aggregate would instead take the (better at scale) grouped
-      // footer pushdown, whose pre-aggregated output schema no longer
-      // carries the base relation's attributes and therefore sheds the
-      // key-grouped property (Spark resolves a scan's reported
-      // partitioning against the ORIGINAL relation output)
-      val fa = spark.read.format("docstore").option("path", a).load()
-        .groupBy("o_year")
-        .agg(count(lit(1)).as("n_a"),
-          sum("o_totalprice").as("rev"))
-      val fb = spark.read.format("docstore").option("path", b).load()
-        .groupBy("o_year")
-        .agg(countDistinct("o_custkey").as("n_custs"))
-      val joined = fa.join(fb.hint("merge"), Seq("o_year"))
-      val rows = joined.select("o_year", "n_a", "n_custs").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      // the whole plan — two scans, two aggregations, one join — runs
-      // on the directory partitioning: ZERO exchanges anywhere
-      val shuffles = physical(joined).collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }
-      assert(shuffles.isEmpty,
-        s"co-partitioned join still shuffled:\n${joined.queryExecution.executedPlan}")
-      val expected = spark.read.parquet(s"$sfDir/orders.parquet")
-        .withColumn("o_year", year(col("o_orderdate")).cast("int"))
-        .groupBy("o_year")
-        .agg(count(lit(1)).as("n_a"), countDistinct("o_custkey").as("n_custs"))
-        .collect().map(r => (r.getInt(0).toString, r.getLong(1), r.getLong(2))).toSet
-      assert(rows == expected, s"SPJ result drifted: $rows vs $expected")
-    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", prev)
+    // sum() is not footer-answerable, so this aggregation stays a
+    // real scan and keeps its KeyGroupedPartitioning — a count-only
+    // aggregate would instead take the (better at scale) grouped
+    // footer pushdown, whose pre-aggregated output schema no longer
+    // carries the base relation's attributes and therefore sheds the
+    // key-grouped property (Spark resolves a scan's reported
+    // partitioning against the ORIGINAL relation output)
+    val fa = spark.read.format("docstore").option("path", a).load()
+      .groupBy("o_year")
+      .agg(count(lit(1)).as("n_a"),
+        sum("o_totalprice").as("rev"))
+    val fb = spark.read.format("docstore").option("path", b).load()
+      .groupBy("o_year")
+      .agg(countDistinct("o_custkey").as("n_custs"))
+    val joined = fa.join(fb.hint("merge"), Seq("o_year"))
+    val rows = joined.select("o_year", "n_a", "n_custs").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    // the whole plan — two scans, two aggregations, one join — runs
+    // on the directory partitioning: ZERO exchanges anywhere
+    val shuffles = physical(joined).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(shuffles.isEmpty,
+      s"co-partitioned join still shuffled:\n${joined.queryExecution.executedPlan}")
+    val expected = spark.read.parquet(s"$sfDir/orders.parquet")
+      .withColumn("o_year", year(col("o_orderdate")).cast("int"))
+      .groupBy("o_year")
+      .agg(count(lit(1)).as("n_a"), countDistinct("o_custkey").as("n_custs"))
+      .collect().map(r => (r.getInt(0).toString, r.getLong(1), r.getLong(2))).toSet
+    assert(rows == expected, s"SPJ result drifted: $rows vs $expected")
   }
 
   test("mixed-writer stores, path-char partition values, and map writes round-trip") {

@@ -166,7 +166,6 @@ class FeatureSpec extends SparkSpec {
   }
 
   test("theta functions: SQL surface registered via GraftExtensions") {
-    GraftExtensions.register(spark)
     Tables.t(spark, sfDir, "events").createOrReplaceTempView("ev_theta")
     val r = spark.sql(
       """SELECT CAST(round(theta_estimate(theta_intersect(a.sk, b.sk))) AS BIGINT) AS n_both
@@ -177,7 +176,6 @@ class FeatureSpec extends SparkSpec {
   }
 
   test("kll functions: SQL surface registered via GraftExtensions") {
-    GraftExtensions.register(spark)
     Tables.t(spark, sfDir, "lineitem").createOrReplaceTempView("li_kll")
     val est = spark.sql(
       """SELECT kll_quantile(

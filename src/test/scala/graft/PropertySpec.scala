@@ -32,17 +32,17 @@ class PropertySpec extends SparkSpec {
       def q() = l.join(r, col("lv") >= col("rv") - w && col("lv") <= col("rv") + w)
         .select("lid", "rid")
       def run() = q().collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      val plain = run()
-      val saved = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations = Seq(BandJoinRule)
-      try {
-        assert(q().queryExecution.optimizedPlan.toString.contains("__band_bucket"),
-          s"width $w: rule did not fire")
-        val rewritten = run()
-        assert(rewritten == plain,
-          s"width $w: rewrite dropped ${(plain -- rewritten).take(5)} " +
-            s"added ${(rewritten -- plain).take(5)}")
-      } finally spark.experimental.extraOptimizations = saved
+      val plain = withConf("spark.sql.optimizer.excludedRules", BandJoinRule.ruleName) {
+        assert(!q().queryExecution.optimizedPlan.toString.contains("__band_bucket"),
+          s"width $w: rule fired while excluded")
+        run()
+      }
+      assert(q().queryExecution.optimizedPlan.toString.contains("__band_bucket"),
+        s"width $w: rule did not fire")
+      val rewritten = run()
+      assert(rewritten == plain,
+        s"width $w: rewrite dropped ${(plain -- rewritten).take(5)} " +
+          s"added ${(rewritten -- plain).take(5)}")
     }
   }
 

@@ -3,23 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy), UTC, small
-  * shuffle fan-out. */
+/** Shared local session for specs: [[Session.build]] pinned to 4 task
+  * slots, so test shuffle fan-out does not follow `SPARK_GRAFT_CPUS`. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // storage-partitioned joins for key-grouped docstore scans: set
-    // from process start so plan shapes never depend on which query
-    // was constructed first (etl_connector_copartition also sets it
-    // for foreign sessions)
-    .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    // recursive-CTE working sets scale with the table (see Bench.scala)
-    .config("spark.sql.cteRecursionRowLimit", "100000000")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(cpus = 4)
 
   val sfDir = "/root/testdata/sf0.001"
 

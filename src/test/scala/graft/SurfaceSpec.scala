@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.ops.AsOf
+import graft.plans.{AsOfJoinExec, BandJoinRule}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** API-surface coverage that isn't oracle-checkable: the
@@ -9,13 +11,66 @@ import org.apache.spark.sql.functions._
 class SurfaceSpec extends SparkSpec {
 
   test("GraftExtensions registers vec_dot and hamming_distance for SQL") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d, " +
         "hamming_distance(255L, 15L) AS h").head()
     assert(r.getDouble(0) == 11.0)
     assert(r.getInt(1) == 4)
+  }
+
+  // A fresh newSession() has built no registered query, so these pass
+  // only if the extensions were installed when the session was built.
+
+  test("a fresh session resolves the engine's SQL functions") {
+    val fresh = spark.newSession()
+    val r = fresh.sql(
+      "SELECT vec_dot(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT))) AS d, " +
+        "theta_estimate(theta_sketch_agg(id)) AS n FROM range(100)").head()
+    assert(r.getDouble(0) == 2.0)
+    assert(r.getDouble(1) == 100.0)
+  }
+
+  test("a fresh session plans a pure band join through BandJoinRule") {
+    def band(s: SparkSession) = {
+      val p = s.read.parquet(s"$sfDir/part.parquet")
+      val su = s.read.parquet(s"$sfDir/supplier.parquet")
+      p.join(su, col("p_retailprice").between(col("s_acctbal") - 500, col("s_acctbal") + 500))
+        .select("p_partkey", "s_suppkey")
+    }
+    val fresh = band(spark.newSession())
+    assert(fresh.queryExecution.optimizedPlan.toString.contains("__band_bucket"),
+      s"rule not installed:\n${fresh.queryExecution.optimizedPlan}")
+    val stockSession = spark.newSession()
+    stockSession.conf.set("spark.sql.optimizer.excludedRules", BandJoinRule.ruleName)
+    val stock = band(stockSession)
+    assert(stock.queryExecution.executedPlan.toString.contains("NestedLoop"))
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val expected = rows(stock)
+    assert(expected.nonEmpty)
+    assert(rows(fresh) == expected)
+  }
+
+  test("a fresh session plans AsOf.join, also through a view read from another session") {
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val l = Seq((1L, 10L), (1L, 30L), (2L, 5L)).toDF("k", "t")
+    val r = Seq((1L, 20L, "a"), (2L, 1L, "b")).toDF("rk", "rt", "v")
+    def planned(df: DataFrame) =
+      df.queryExecution.sparkPlan.exists(_.isInstanceOf[AsOfJoinExec])
+    val joined = AsOf.join(l, r, "k", "rk", "t", "rt")
+    assert(planned(joined))
+    // another fresh session never called AsOf.join: only the strategy
+    // installed at build can plan the view's AsOfJoin node
+    joined.createOrReplaceGlobalTempView("surface_asof")
+    try {
+      val viewed = spark.newSession().table("global_temp.surface_asof")
+      assert(planned(viewed))
+      assert(viewed.select("k", "t", "v").collect()
+        .map(x => (x.getLong(0), x.getLong(1), Option(x.getString(2)))).sorted.toSeq ==
+        Seq((1L, 10L, None), (1L, 30L, Some("a")), (2L, 5L, Some("b"))))
+    } finally spark.catalog.dropGlobalTempView("surface_asof")
   }
 
   test("approx_count_distinct within 10% (2x default rsd) of exact") {
