@@ -171,9 +171,6 @@ object Bench {
   /** Final stdout line: complete JSON, bounded size (tail-capture-safe). */
   def machineLine(results: Map[String, Double], total: Double,
       failed: Int, sfDir: String): String = {
-    // A renamed query must not silently vanish from the headline map.
-    headline.filterNot(results.contains).foreach(n =>
-      System.err.println(s"[bench] headline query '$n' not in results — rename headline too"))
     val hq = headline.flatMap(n => results.get(n).map(v => "\"" + n + "\":" + f3(v)))
       .mkString("{", ",", "}")
     s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$hq,"failed":$failed,"n_queries":${results.size},"sf":"$sfDir"}"""

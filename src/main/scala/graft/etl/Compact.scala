@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Small-files compaction — the standing operational problem of any
   * partitioned 100 TB sink: long-running ingestion accumulates
@@ -16,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * table formats, not a filesystem rename here. */
 object Compact {
 
-  /** Returns the number of rows written (from the write job's own
-    * metric, no re-read). */
+  /** Returns the number of rows written (observed during the write,
+    * no re-read). */
   def compact(
       spark: SparkSession,
       inDir: String,
@@ -25,12 +26,12 @@ object Compact {
       targetFiles: Int,
       compression: String = "zstd"): Long = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val df = spark.read.parquet(inDir)
-    Export.countedWrite(spark) {
-      df.repartition(targetFiles)
-        .write.mode("overwrite")
-        .option("compression", compression)
-        .parquet(outDir)
-    }
+    val (df, obs) = Metrics.observed(spark.read.parquet(inDir), "compact",
+      count(lit(1)).as("rows"))
+    df.repartition(targetFiles)
+      .write.mode("overwrite")
+      .option("compression", compression)
+      .parquet(outDir)
+    obs.get("rows").asInstanceOf[Long]
   }
 }

@@ -727,6 +727,9 @@ object EtlQueries {
         "Each filter is sized to its row group's keys (~10 bits per " +
         "key at 1 % fpp, capped at 1 MiB), so the 16 KB row groups " +
         "here (~1k keys each) carry 2 KiB filters, not 1 MiB each. " +
+        "The write records o_orderkey in the store's `_bloom` file, " +
+        "so later appends, MERGEs, upserts and compactions keep the " +
+        "filter without naming it again. " +
         "The lookup itself is oracle-exact.",
       (s, dir) => {
         val store = graft.Scratch.once(s"etl_connector_bloom:$dir") { p =>

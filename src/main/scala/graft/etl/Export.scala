@@ -98,35 +98,17 @@ object Export {
     val out = s"${cfg.outputDir}/$table"
     val (start, end) = cfg.rangeFor(table)
     val df = transform(source.read(spark, table), dateCol, start, end)
-    // A13's running count comes from the write job's own numOutputRows
-    // metric (a re-read-and-count would double every export's read I/O
-    // — at 100 TB that is the difference between one pass and two).
-    val rows = countedWrite(spark) {
-      df.write
-        .mode("overwrite")
-        .partitionBy("part_year")
-        .option("compression", cfg.compression)
-        // reference rotates files at row_group_size*10 rows (main.py:225-228)
-        .option("maxRecordsPerFile", cfg.rowGroupSize.toLong * 10)
-        .parquet(out)
-    }
-    TableResult(table, rows, out)
-  }
-
-  /** Runs a write action and returns its numOutputRows metric — the
-    * plan's own exact counter, no second scan. The listener bus is
-    * asynchronous, so a barrier precedes the read. */
-  private[etl] def countedWrite(spark: SparkSession)(write: => Unit): Long = {
-    val recorder = Metrics.attach(spark)
-    try {
-      write
-      org.apache.spark.sql.graftshim.CatalystBridge.waitForListeners(spark)
-      recorder.snapshot()
-        .filter(_.failure.isEmpty)
-        .flatMap(_.numOutputRows)
-        .lastOption
-        .getOrElse(throw new IllegalStateException(
-          "write reported no numOutputRows metric"))
-    } finally Metrics.detach(spark, recorder)
+    // A13's running count is observed DURING the write (a
+    // re-read-and-count would double every export's read I/O — at
+    // 100 TB that is the difference between one pass and two).
+    val (counted, obs) = Metrics.observed(df, s"export:$table", count(lit(1)).as("rows"))
+    counted.write
+      .mode("overwrite")
+      .partitionBy("part_year")
+      .option("compression", cfg.compression)
+      // reference rotates files at row_group_size*10 rows (main.py:225-228)
+      .option("maxRecordsPerFile", cfg.rowGroupSize.toLong * 10)
+      .parquet(out)
+    TableResult(table, obs.get("rows").asInstanceOf[Long], out)
   }
 }

@@ -1,24 +1,11 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-
 /** A15 observability: the reference logs START/END + doc counts per
   * collection to a JSON-lines file (reference main.py:49-58, 230-232,
-  * 309). Spark-native equivalent: a QueryExecutionListener that captures
-  * per-action physical-plan metrics (rows written, files, bytes) — the
-  * numbers come from the executed plan itself instead of hand-kept
-  * counters, so they're exact under retries and partial failures. */
+  * 309). Spark-native equivalent: metrics observed on the plan itself
+  * while the action runs, so the numbers are exact under retries and
+  * partial failures instead of hand-kept counters. */
 object Metrics {
-
-  final case class ActionMetrics(
-      funcName: String,
-      durationNs: Long,
-      numOutputRows: Option[Long],
-      failure: Option[String])
 
   /** Inline pipeline metrics via `Dataset.observe`: the named
     * aggregates are computed DURING the action that consumes the
@@ -33,49 +20,5 @@ object Metrics {
       rest: org.apache.spark.sql.Column*): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation(name)
     (df.observe(obs, first, rest: _*), obs)
-  }
-
-  /** Attach a capturing listener; returns a handle to read/clear. */
-  def attach(spark: SparkSession): Recorder = {
-    val r = new Recorder
-    spark.listenerManager.register(r.listener)
-    r
-  }
-
-  /** Remove a recorder's listener (scoped use: attach → action → read →
-    * detach, so short-lived recorders don't accumulate on the session). */
-  def detach(spark: SparkSession, r: Recorder): Unit =
-    spark.listenerManager.unregister(r.listener)
-
-  final class Recorder {
-    private val events = new ConcurrentLinkedQueue[ActionMetrics]()
-
-    private[Metrics] val listener: QueryExecutionListener = new QueryExecutionListener {
-      // Topmost numOutputRows in the executed plan. For narrow writes
-      // that is the write-command root itself; when the plan contains a
-      // shuffle, planned-write + AQE make the root an
-      // AdaptiveSparkPlanExec with EMPTY metrics and HIDDEN children
-      // (its final plan is not in `children`), so the search descends
-      // through the AQE wrapper and materialized query stages.
-      private def rowsOf(p: org.apache.spark.sql.execution.SparkPlan): Option[Long] =
-        p.metrics.get("numOutputRows").map(_.value).orElse {
-          val kids = p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              Seq(a.executedPlan)
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-              Seq(q.plan)
-            case other => other.children
-          }
-          kids.view.flatMap(rowsOf).headOption
-        }
-
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        events.add(ActionMetrics(funcName, durationNs, rowsOf(qe.executedPlan), None))
-      override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit =
-        events.add(ActionMetrics(funcName, 0L, None, Some(error.toString)))
-    }
-
-    def snapshot(): Seq[ActionMetrics] = events.asScala.toSeq
-    def clear(): Unit = events.clear()
   }
 }

@@ -80,37 +80,9 @@ object Skew {
   def adaptiveSalts(df: DataFrame): Int =
     math.max(8, df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Inner equi-join of `big` and `small` on `key`, salted `salts` ways.
-    * `spreadBy` drives the salt for the big side — any column(s) that
-    * vary within a key (a row id, a timestamp); kept deterministic so
-    * results are reproducible.
-    *
-    * BLANKET salting: replicates the ENTIRE small side `salts`×, so the
-    * default is a small constant — NOT cluster width; an adaptive
-    * default here would copy the whole small side `defaultParallelism`
-    * times (10,000× on a 10k-core cluster). Prefer [[saltedJoinHot]],
-    * which replicates only the measured-hot keys and right-sizes each
-    * key's fan-out; use this form only when every key is known hot and
-    * the small side is tiny. */
-  def saltedJoin(
-      big: DataFrame,
-      small: DataFrame,
-      key: String,
-      spreadBy: Column,
-      salts: Int = 8): DataFrame = {
-    // 0 was the old "adaptive" sentinel; silently mapping it to 1 would
-    // turn a requested cluster-width spread into NO salting — fail loud
-    require(salts >= 1, s"saltedJoin: salts must be >= 1 (got $salts); " +
-      "the adaptive default now lives on saltedJoinHot only")
-    val n = salts
-    val b = big.withColumn("__salt", pmod(xxhash64(spreadBy), lit(n.toLong)))
-    val s = small.withColumn("__salt", explode(typedlit((0L until n.toLong).toSeq)))
-    b.join(s, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Hot-key-only salting: blanket salting replicates the whole small
-    * side `salts`×, but in the power-law reality only a handful of keys
-    * are hot. Single-pass formulation: each side gets a broadcast
+  /** Hot-key-only salting: blanket salting would replicate the whole
+    * small side `salts`×, but in the power-law reality only a handful
+    * of keys are hot. Single-pass formulation: each side gets a broadcast
     * hot-key fan-out; the big side salts hot rows (cold rows take salt
     * 0), the small side replicates ONLY hot rows across that key's
     * salts (cold rows take the one-element salt list) — then one

@@ -297,6 +297,8 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
       m = m.copy(nameMap = m.nameMap + (n -> m.nextId), nextId = m.nextId + 1)
     }
     var schema = cur.tableSchema
+    // the store's bloom columns follow RENAME and DROP
+    var bloomEdit: String => Option[String] = Some(_)
     // files still physically carrying column `n` — the error payload
     // the name-reuse refusals cite
     def filesCarrying(n: String): Seq[String] =
@@ -353,6 +355,8 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
           if (x.name == from) x.copy(name = to) else x))
         // the OLD binding stays: pre-rename files resolve through it
         m = m.copy(nameMap = m.nameMap + (to -> id))
+        val prev = bloomEdit
+        bloomEdit = n => prev(n).map(c => if (c.equalsIgnoreCase(from)) to else c)
       case del: TableChange.DeleteColumn =>
         require(del.fieldNames().length == 1,
           "docstore: DROP COLUMN supports top-level columns only")
@@ -366,6 +370,8 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
                 "directory layout depends on it; repartition the store instead")
             schema = StructType(schema.fields.filterNot(_.name == name))
             m = m.copy(dropped = m.dropped + m.nameMap(name))
+            val prev = bloomEdit
+            bloomEdit = n => prev(n).filterNot(_.equalsIgnoreCase(name))
         }
       case other => throw new UnsupportedOperationException(
         s"docstore: unsupported ALTER TABLE change $other — supported " +
@@ -375,6 +381,7 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
     m = m.copy(schema = schema, partitionBy = cur.tablePartitionBy,
       rowLevel = cur.rowLevelMode)
     SchemaMarker.write(fs, p, m)
+    DocStore.alterBloomColumns(p.toString)(bloomEdit)
     DocStoreTable(p.toString, schema, cur.tablePartitionBy,
       rowLevelMode = cur.rowLevelMode, renamedFrom = m.renamedFrom)
   }

@@ -1,11 +1,10 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Store maintenance: the jobs a 100 TB docstore deployment schedules
   * around its ingest — small-file COMPACTION (the streaming sink and
@@ -262,21 +261,9 @@ object DocStoreMaintenance {
         all0.repartition(math.max(1L,
           (totalBytes + smallerThan - 1) / smallerThan).toInt)
       }
-    val w0 = all.write.format("docstore").option("path", stagingStore)
-    val w1 = if (partKeys.nonEmpty) w0.option("partitionBy", partKeys.mkString(",")) else w0
-    val w2 = if (sortBy.nonEmpty) w1.option("sortBy", sortBy.mkString(",")) else w1
-    val w3 = rowGroupBytes.fold(w2)(n => w2.option("rowGroupBytes", n.toString))
-    // keep the bloom index: every data column that carries a filter in
-    // any input file's footer gets one in the rewrite, so point lookups
-    // keep the skip the appends paid for
-    val bloomed = bins.flatMap(_._2).flatMap { case (f, _) =>
-      DocStore.footerBlocks(f).flatMap(_.getColumns.asScala
-        .filter(_.getBloomFilterOffset >= 0).map(_.getPath.toDotString))
-    }.toSet
-    val bloomFor = all.schema.fieldNames
-      .filter(c => bloomed(c) && !partKeys.contains(c))
-    val w4 = if (bloomFor.nonEmpty) w3.option("bloomFor", bloomFor.mkString(",")) else w3
-    w4.mode("append").save()
+    DocStore.writeStaged(all, stagingStore, partKeys,
+      DocStore.bloomColumns(path, CaseInsensitiveStringMap.empty(), all.schema, partKeys),
+      sortBy, rowGroupBytes)
 
     // publish: staged rel → store rel under a compaction-unique name
     // (visible-NAMED but, on a snapshot store, invisible until the
@@ -495,16 +482,7 @@ object DocStoreMaintenance {
       fs.makeQualified(p).toString.stripPrefix(rootQ + "/")
     }.filterNot(referenced)
       .filter(rel => fs.getFileStatus(new Path(root, rel)).getModificationTime < cutoff)
-    dead.foreach { rel =>
-      val p = new Path(root, rel)
-      fs.delete(p, false)
-      var d = p.getParent
-      while (d != null && d.getName.contains("=") &&
-        fs.exists(d) && fs.listStatus(d).isEmpty) {
-        fs.delete(d, false)
-        d = d.getParent
-      }
-    }
+    dead.foreach(rel => DocStore.retireFile(fs, new Path(root, rel)))
     dead.size
   }
 }

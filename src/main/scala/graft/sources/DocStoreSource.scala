@@ -308,19 +308,8 @@ case class DocStoreTable(path: String, tableSchema: StructType,
       DocStore.commitSnapshot(path, op = "delete")(_.filterNot(drop)): Unit
       return
     }
-    val conf = DocStore.hadoopConf
-    val fsys = new Path(path).getFileSystem(conf)
-    matched.foreach { case (f, _) =>
-      val p = new Path(f)
-      fsys.delete(p, false)
-      // reclaim partition dirs this delete emptied (root stays)
-      var d = p.getParent
-      while (d != null && d.getName.contains("=") &&
-        fsys.exists(d) && fsys.listStatus(d).isEmpty) {
-        fsys.delete(d, false)
-        d = d.getParent
-      }
-    }
+    val fsys = new Path(path).getFileSystem(DocStore.hadoopConf)
+    matched.foreach { case (f, _) => DocStore.retireFile(fsys, new Path(f)) }
   }
 
   // ---- group-based copy-on-write row-level operations ----
@@ -2084,6 +2073,9 @@ class DocStoreWriteBuilder(path: String, info: LogicalWriteInfo,
           case (t, w) => StructField(t.name, w.dataType, w.nullable)
         })
       else qSchema
+    private val partCols = partPos.map(i => writeSchema.fields(i).name)
+    private def bloomFor =
+      DocStore.bloomColumns(path, info.options(), writeSchema, partCols)
 
     // mergeSchema (schema evolution): validate the write's schema is a
     // SAFE evolution of the store's — at PLAN time, so an unsafe write
@@ -2117,14 +2109,11 @@ class DocStoreWriteBuilder(path: String, info: LogicalWriteInfo,
           SortDirection.ASCENDING)).toArray
 
     override def toBatch: BatchWrite =
-      DocStoreBatchWrite(path, writeSchema,
-        partPos.map(i => writeSchema.fields(i).name),
+      DocStoreBatchWrite(path, writeSchema, partCols,
         info.queryId(), truncateFirst,
         DocStore.rowGroupBytesOf(info.options()),
         snapshots = info.options().getBoolean("snapshots", false),
-        bloomFor = DocStore.resolveBloomFor(
-          DocStore.bloomForOf(info.options()), writeSchema,
-          partPos.map(i => writeSchema.fields(i).name)),
+        bloomFor = bloomFor,
         branchTo = Option(info.options().get("branch")).map(_.trim))
 
     /** Streaming sink: per-EPOCH staged commits with an idempotence
@@ -2145,17 +2134,13 @@ class DocStoreWriteBuilder(path: String, info: LogicalWriteInfo,
         require(missing.isEmpty,
           s"docstore: upsert key(s) ${missing.mkString(", ")} not in the " +
             s"stream schema ${writeSchema.fieldNames.mkString("[", ",", "]")}")
-        DocStoreUpsertStreamingWrite(path, writeSchema,
-          partPos.map(i => writeSchema.fields(i).name),
-          info.queryId(), keys, DocStore.rowGroupBytesOf(info.options()))
-      } else {
-        val partCols = partPos.map(i => writeSchema.fields(i).name)
+        DocStoreUpsertStreamingWrite(path, writeSchema, partCols,
+          info.queryId(), keys, DocStore.rowGroupBytesOf(info.options()), bloomFor)
+      } else
         DocStoreStreamingWrite(path, writeSchema, partCols,
           info.queryId(), DocStore.rowGroupBytesOf(info.options()),
           snapshots = info.options().getBoolean("snapshots", false),
-          bloomFor = DocStore.resolveBloomFor(
-            DocStore.bloomForOf(info.options()), writeSchema, partCols))
-      }
+          bloomFor = bloomFor)
     }
 
     override def description(): String = s"DocStoreWrite path=$path"
@@ -2284,7 +2269,8 @@ case class DocStoreUpsertStreamingWrite(
     partitionBy: Seq[String],
     queryId: String,
     keys: Seq[String],
-    rowGroupBytes: Option[Long] = None) extends StreamingWrite {
+    rowGroupBytes: Option[Long] = None,
+    bloomFor: Seq[String] = Nil) extends StreamingWrite {
 
   private def staging(epochId: Long) = s"$path/_staging-$queryId-epoch-$epochId"
   private def pubStore(epochId: Long) = s"$path/_staging-$queryId-epoch-$epochId-pub"
@@ -2390,14 +2376,11 @@ case class DocStoreUpsertStreamingWrite(
           .groupBy(t => DocStore.relOf(path, t._1))
           .map { case (rel, fr) => rel -> fr.toSeq.map(t => (t._2, t._3)) }
       }
-    // publish surviving rows as data files (routed by the target's
-    // partitioning), rename into the store, commit ONE rowdelta
+    // publish surviving rows as data files (routed and bloom-filtered
+    // like the target), rename into the store, commit ONE rowdelta
     val pub = pubStore(epochId)
-    val w0 = inserts.write.format("docstore").option("path", pub)
-    val w1 = if (partitionBy.nonEmpty)
-      w0.option("partitionBy", partitionBy.mkString(",")) else w0
-    rowGroupBytes.fold(w1)(n => w1.option("rowGroupBytes", n.toString))
-      .mode("append").save()
+    DocStore.writeStaged(inserts, pub, partitionBy, bloomFor,
+      rowGroupBytes = rowGroupBytes)
     val fs = new Path(path).getFileSystem(DocStore.hadoopConf)
     val newRels = DocStore.listFiles(pub).map { f =>
       val rel = DocStore.relOf(pub, f)
@@ -2481,7 +2464,9 @@ class DocStoreRowLevelOperation(
             info.queryId(), truncateFirst = false, rowGroupBytes = None,
             replaceFiles = Some(() =>
               Option(opScan).map(_.currentFiles).getOrElse(Nil)),
-            expectOpColumn = true)
+            expectOpColumn = true,
+            bloomFor = DocStore.bloomColumns(path, info.options(),
+              info.schema(), partitionBy))
         override def description(): String =
           s"DocStoreCopyOnWrite($cmd, path=$path)"
       }
@@ -2559,7 +2544,8 @@ class DocStoreDeltaOperation(
             Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
         override def toBatch: DeltaBatchWrite =
           new DocStoreDeltaBatchWrite(path, info.schema(), partitionBy,
-            info.queryId())
+            info.queryId(), DocStore.bloomColumns(path, info.options(),
+              info.schema(), partitionBy))
         override def description(): String =
           s"DocStoreMergeOnRead($cmd, path=$path)"
       }
@@ -2592,7 +2578,8 @@ class DocStoreDeltaBatchWrite(
     path: String,
     rowSchema: StructType,
     partitionBy: Seq[String],
-    queryId: String) extends DeltaBatchWrite {
+    queryId: String,
+    bloomFor: Seq[String]) extends DeltaBatchWrite {
 
   private def staging = s"$path/_staging-$queryId"
 
@@ -2600,7 +2587,7 @@ class DocStoreDeltaBatchWrite(
   private val baselineDv: Map[String, String] = DocStore.dvMap(path, None)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    DocStoreDeltaWriterFactory(path, staging, rowSchema, partitionBy)
+    DocStoreDeltaWriterFactory(path, staging, rowSchema, partitionBy, bloomFor)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = DocStore.hadoopConf
@@ -2650,10 +2637,11 @@ case class DocStoreDeltaWriterFactory(
     path: String,
     staging: String,
     rowSchema: StructType,
-    partitionBy: Seq[String]) extends DeltaWriterFactory {
+    partitionBy: Seq[String],
+    bloomFor: Seq[String]) extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DocStoreDeltaWriter(path, staging, rowSchema, partitionBy,
-      partitionId, taskId)
+      partitionId, taskId, bloomFor)
 }
 
 /** Task side: inserts delegate to the ordinary staging parquet writer;
@@ -2666,13 +2654,15 @@ class DocStoreDeltaWriter(
     rowSchema: StructType,
     partitionBy: Seq[String],
     partitionId: Int,
-    taskId: Long) extends DeltaWriter[InternalRow] {
+    taskId: Long,
+    bloomFor: Seq[String] = Nil) extends DeltaWriter[InternalRow] {
 
   // a pure DELETE has NO row schema (the delta plan carries only
   // operation + row id) — the insert writer must never materialize
   private lazy val inserts =
     new DocStoreDataWriter(staging, rowSchema,
-      partitionBy.filter(rowSchema.fieldNames.contains), partitionId, taskId)
+      partitionBy.filter(rowSchema.fieldNames.contains), partitionId, taskId,
+      bloomFor = bloomFor)
   private var wroteInserts = false
   private val deleted = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
 
@@ -2826,18 +2816,8 @@ case class DocStoreBatchWrite(
     // affected groups on the same crash. In snapshot mode the manifest
     // swap above IS the durable-atomic commit and the old files stay
     // for time travel — vacuum reclaims them.
-    if (!snapMode) replaceFiles.foreach { thunk =>
-      thunk().foreach { f =>
-        val p = new Path(f)
-        fs.delete(p, false)
-        var d = p.getParent
-        while (d != null && d.getName.contains("=") &&
-          fs.exists(d) && fs.listStatus(d).isEmpty) {
-          fs.delete(d, false)
-          d = d.getParent
-        }
-      }
-    }
+    if (!snapMode) replaceFiles.foreach(_().foreach(f =>
+      DocStore.retireFile(fs, new Path(f))))
     fs.delete(stagingPath, true): Unit
   }
 
@@ -2885,10 +2865,8 @@ class DocStoreDataWriter(
     // Batch writes keep attempt-unique names (separate appends to one
     // store must never collide across commits).
     fileSuffix: Option[String] = None,
-    // data columns to write parquet bloom filters for — already
-    // resolved to exact-case data-field names by
-    // [[DocStore.resolveBloomFor]] (unknown names errored at plan
-    // time; partition columns were dropped there)
+    // data columns to write parquet bloom filters for, as
+    // [[DocStore.bloomColumns]] resolved them on the driver
     bloomFor: Seq[String] = Nil) extends DataWriter[InternalRow] {
 
   private val conf = new Configuration(DocStore.hadoopConf)
@@ -2939,8 +2917,8 @@ class DocStoreDataWriter(
       rowGroupBytes.foreach(n => b.withRowGroupSize(n))
       // adaptive bloom sizing: each row group's filter is the smallest
       // power-of-two candidate whose capacity at the default fpp holds
-      // the keys it saw (see [[DocStore.bloomForOf]])
-      bloomFor.filter(c => dataFields.exists(_._2.name == c)).foreach { c =>
+      // the keys it saw (see [[DocStore.bloomColumns]])
+      bloomFor.foreach { c =>
         b.withBloomFilterEnabled(c, true).withAdaptiveBloomFilterEnabled(true)
           .withBloomFilterCandidateNumber(c, DocStore.BloomCandidates)
       }
@@ -3104,13 +3082,38 @@ object DocStore {
   def rowGroupBytesOf(options: CaseInsensitiveStringMap): Option[Long] =
     Option(options.get("rowGroupBytes")).map(_.trim.toLong)
 
-  /** Columns the sink writes parquet BLOOM FILTERS for. Point lookups
+  /** The store's BLOOM COLUMNS: the one function that decides which
+    * data columns of a write carry parquet bloom filters. Point lookups
     * on an unsorted high-cardinality column are the case zone maps
     * can't serve — every row group's min/max straddles the probe — so
     * at 100 TB `WHERE key = x` reads every data page. A bloom filter
     * per row group turns that into a footer-and-bitset check:
     * parquet-mr's own RowGroupFilter consults it on the read path (the
     * reader's FilterCompat predicate), no reader changes needed.
+    *
+    * THE RECORD: the columns are a property of the store, not of one
+    * write. The first write whose `bloomFor` option names columns
+    * records them, as exact-case data-column names, in the root file
+    * [[BloomRecord]] (plain and snapshot stores alike; the underscore
+    * keeps it out of listings). The rules, applied on the driver
+    * before any task runs:
+    *  - `bloomFor` names resolve against the write schema
+    *    CASE-INSENSITIVELY, the way Spark resolves columns; an unknown
+    *    name is an ERROR (a silently ignored typo means no filter and
+    *    no warning, found only when a point lookup reads every page);
+    *  - partition columns resolve but are dropped: they live in the
+    *    directory path, where file pruning serves them exactly;
+    *  - once a record exists, naming a recorded column again is a
+    *    no-op and naming any other column fails with the recorded set
+    *    (the set is fixed by its first write; `bloomFor` is still the
+    *    only way to set it);
+    *  - `ALTER TABLE … RENAME/DROP COLUMN` edit the record
+    *    ([[alterBloomColumns]]).
+    * Returns the recorded columns present in this write's schema, in
+    * the schema's exact case, partition columns dropped. Every writer
+    * builds its data writers from this result: batch append, streaming
+    * append, copy-on-write and merge-on-read row-level operations, the
+    * streaming upsert sink's publish write, and compaction.
     *
     * SIZING: the writer sees rows as a stream, so no NDV is known up
     * front. Parquet's adaptive filter keeps [[BloomCandidates]]
@@ -3124,12 +3127,99 @@ object DocStore {
     * cost the full 1 MiB per row group however few keys it held. The
     * price is transient memory: the candidates together take up to
     * ~2 MiB (instead of 1 MiB) per bloom column per open writer, freed
-    * when the row group flushes. The batch sink, the streaming append
-    * sink and compaction (which re-applies the filters its input
-    * files carry) all write filters sized this way. */
-  def bloomForOf(options: CaseInsensitiveStringMap): Seq[String] =
-    Option(options.get("bloomFor")).toSeq
+    * when the row group flushes. */
+  def bloomColumns(path: String, options: CaseInsensitiveStringMap,
+      schema: StructType, partitionBy: Seq[String]): Seq[String] = {
+    def resolve(c: String) = schema.fieldNames.find(_.equalsIgnoreCase(c))
+    val named = Option(options.get("bloomFor")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+      .map(c => resolve(c).getOrElse(throw new IllegalArgumentException(
+        s"docstore: bloomFor column '$c' is not in the write schema " +
+          schema.fieldNames.mkString("[", ",", "]"))))
+      .filterNot(partitionBy.contains).distinct
+    val recorded = readBloomRecord(path) match {
+      case None if named.nonEmpty => claimBloomRecord(path, named)
+      case r => r.getOrElse(Nil)
+    }
+    val outside = named.filterNot(c => recorded.exists(_.equalsIgnoreCase(c)))
+    require(outside.isEmpty,
+      s"docstore: bloomFor column(s) ${outside.mkString("'", "', '", "'")} " +
+        s"not among the store's bloom columns ${recorded.mkString("[", ",", "]")} " +
+        s"recorded in $path/$BloomRecord by its first bloomFor write")
+    recorded.flatMap(resolve).filterNot(partitionBy.contains)
+  }
+
+  /** Root file holding a store's bloom columns, one per line. */
+  val BloomRecord = "_bloom"
+
+  private def bloomRecordPath(path: String) = new Path(path, BloomRecord)
+
+  private def bloomRecordBytes(names: Seq[String]) =
+    names.mkString("", "\n", "\n").getBytes("UTF-8")
+
+  /** The recorded bloom columns; None for a store without a record (or
+    * one whose first writer has created but not yet filled it). */
+  private def readBloomRecord(path: String): Option[Seq[String]] = {
+    val f = bloomRecordPath(path)
+    val fs = f.getFileSystem(hadoopConf)
+    if (!fs.exists(f)) None
+    else {
+      val in = fs.open(f)
+      val names =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .map(_.trim).filter(_.nonEmpty).toList
+        finally in.close()
+      Some(names).filter(_.nonEmpty)
+    }
+  }
+
+  /** First `bloomFor` write: claim the record exclusively. A concurrent
+    * first write that lost the race adopts the winner's record (and is
+    * then checked against it like any later write). */
+  private def claimBloomRecord(path: String, names: Seq[String]): Seq[String] = {
+    val f = bloomRecordPath(path)
+    try {
+      val out = createExclusive(f.getFileSystem(hadoopConf), f)
+      try out.write(bloomRecordBytes(names)) finally out.close()
+      names
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+           _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        Iterator.continually { Thread.sleep(10); readBloomRecord(path) }
+          .take(500).collectFirst { case Some(r) => r }
+          .getOrElse(throw new IllegalStateException(
+            s"docstore: $path/$BloomRecord exists but stayed empty"))
+    }
+  }
+
+  /** `ALTER TABLE … RENAME/DROP COLUMN` on the record: `edit` maps each
+    * recorded name to its new name, or to None when the column is
+    * gone. A record left empty is deleted, so a later `bloomFor` write
+    * may record afresh. */
+  def alterBloomColumns(path: String)(edit: String => Option[String]): Unit =
+    readBloomRecord(path).foreach { names =>
+      val next = names.flatMap(edit)
+      val f = bloomRecordPath(path)
+      val fs = f.getFileSystem(hadoopConf)
+      if (next.isEmpty) fs.delete(f, false): Unit
+      else if (next != names) {
+        val out = fs.create(f, true)
+        try out.write(bloomRecordBytes(next)) finally out.close()
+      }
+    }
+
+  /** Append `df` to a private staging store (compaction's rewrite, the
+    * upsert sink's publish), routed by `partitionBy` and filtered on
+    * `bloomFor` — the owning store's [[bloomColumns]]. */
+  def writeStaged(df: DataFrame, staging: String, partitionBy: Seq[String],
+      bloomFor: Seq[String], sortBy: Seq[String] = Nil,
+      rowGroupBytes: Option[Long] = None): Unit =
+    df.write.format("docstore").option("path", staging)
+      .options(Seq("partitionBy" -> partitionBy, "sortBy" -> sortBy,
+        "bloomFor" -> bloomFor).collect {
+        case (k, cs) if cs.nonEmpty => k -> cs.mkString(",")
+      }.toMap ++ rowGroupBytes.map(n => "rowGroupBytes" -> n.toString))
+      .mode("append").save()
 
   /** Adaptive bloom candidates per column: one per power-of-two size
     * from the 1 MiB cap down to the 32 B floor of a split-block filter
@@ -3221,6 +3311,18 @@ object DocStore {
     }
   }
 
+  /** Delete data file `f` and reclaim the partition directories the
+    * delete leaves empty (the store root stays). */
+  def retireFile(fs: FileSystem, f: Path): Unit = {
+    fs.delete(f, false)
+    var d = f.getParent
+    while (d != null && d.getName.contains("=") &&
+      fs.exists(d) && fs.listStatus(d).isEmpty) {
+      fs.delete(d, false)
+      d = d.getParent
+    }
+  }
+
   def fileLen(f: String): Long = {
     val p = new Path(f)
     p.getFileSystem(DocStore.hadoopConf).getFileStatus(p).getLen
@@ -3263,23 +3365,6 @@ object DocStore {
       throw new IllegalArgumentException(
         s"docstore: no snapshot of $path existed at $ts"))
   }
-
-  /** Resolve `bloomFor` names against the write schema the way Spark
-    * resolves columns — CASE-INSENSITIVELY — and make unknown names an
-    * ERROR: a silently-ignored typo means no bloom filter and no
-    * warning, discovered only when the 100 TB point-lookup reads every
-    * data page. Partition columns resolve but are dropped (they live
-    * in the directory path, not in data pages — file pruning already
-    * serves them exactly). Returns the exact-case data-field names the
-    * parquet builder needs. */
-  def resolveBloomFor(names: Seq[String], schema: StructType,
-      partitionBy: Seq[String]): Seq[String] =
-    names.map { c =>
-      schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"docstore: bloomFor column '$c' is not in the write schema " +
-            schema.fieldNames.mkString("[", ",", "]"))).name
-    }.filterNot(partitionBy.contains)
 
   /** Data files under `path` with partition values parsed from Hive
     * `k=v` directory segments, resolved through the Hadoop FileSystem

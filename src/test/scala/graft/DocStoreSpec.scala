@@ -1525,6 +1525,152 @@ class DocStoreSpec extends SparkSpec {
       .filter(col("k") === hit).count() == before.count(_._1 == hit))
   }
 
+  // ---- the store's bloom record: every writer honours it ----
+
+  private def ensureCat(name: String, root: String): Unit =
+    if (spark.conf.getOption(s"spark.sql.catalog.$name").isEmpty) {
+      spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.DocStoreCatalog")
+      spark.conf.set(s"spark.sql.catalog.$name.root", root)
+    }
+
+  /** The store's recorded bloom columns (its `_bloom` root file). */
+  private def bloomRecord(store: String): Seq[String] = {
+    val f = new java.io.File(store, "_bloom")
+    if (!f.exists) Nil
+    else {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().map(_.trim).filter(_.nonEmpty).toList finally src.close()
+    }
+  }
+
+  /** Every file of `files` carries a filter on `c` in every row group,
+    * and an absent-key probe materializes no row of it. */
+  private def assertFiltered(files: Seq[String], c: String): Unit = {
+    assert(files.nonEmpty, "no new files to check")
+    files.foreach { f =>
+      assert(bloomChunks(f, c).forall(_.getBloomFilterOffset >= 0),
+        s"$f has no bloom filter on $c")
+      assert(rowsWithBloom(f, c, 1L, bloom = true) == 0L, s"absent key read from $f")
+    }
+  }
+
+  /** Even keys (so the odd probe 1 is absent) in `n` unsorted rows. */
+  private def evenKeys(n: Int, salt: Long = 0L): Seq[Long] =
+    (0L until n.toLong).map(i => ((i * 2654435761L + salt) % 100000L) * 2)
+
+  private def mergeKeepsFilters(mode: String): Unit = {
+    import spark.implicits._
+    val cat = s"bl_$mode"
+    val root = tmpDir(s"docstore_bloom_merge_$mode")
+    ensureCat(cat, root)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    spark.sql(s"""CREATE TABLE $cat.db.t (k BIGINT, v STRING, p STRING)
+      USING docstore PARTITIONED BY (p) TBLPROPERTIES ('rowlevel'='$mode')""")
+    val keys = evenKeys(400)
+    keys.map(k => (k, s"v$k", s"p${k % 3}")).toDF("k", "v", "p").coalesce(1)
+      .writeTo(s"$cat.db.t").option("bloomFor", "K").append()
+    val path = s"$root/db/t"
+    val before = DocStore.listFiles(path).toSet
+    assertFiltered(before.toSeq, "k")
+    // updates half the keys and inserts new ones; no bloomFor option
+    (keys.take(200).map(k => (k, "upd")) ++ evenKeys(50, 7L).map(k => (k + 200000L, "new")))
+      .toDF("k", "v").createOrReplaceTempView(s"bloom_merge_src_$mode")
+    spark.sql(s"""MERGE INTO $cat.db.t t USING bloom_merge_src_$mode s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT (k, v, p) VALUES (s.k, s.v, 'pn')""")
+    val rows = spark.table(s"$cat.db.t")
+    assert(rows.count() == keys.distinct.size + 50)
+    assert(rows.filter(col("v") === "upd").count() == keys.take(200).distinct.size)
+    assertFiltered(DocStore.listFiles(path).filterNot(before), "k")
+  }
+
+  test("MERGE INTO under 'mor' writes bloom filters on a store whose appends named bloomFor") {
+    mergeKeepsFilters("mor")
+  }
+
+  test("MERGE INTO under 'cow' writes bloom filters on a store whose appends named bloomFor") {
+    mergeKeepsFilters("cow")
+  }
+
+  test("streaming upsert into a bloomFor store leaves a filter on every published file") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    val target = tmpDir("docstore_bloom_upsert")
+    evenKeys(300).map(k => (k, "a")).toDF("k", "v").coalesce(1)
+      .write.format("docstore").option("path", target)
+      .option("bloomFor", "k").mode("append").save()
+    val before = DocStore.listFiles(target).toSet
+    val in = MemoryStream[(Long, String)](spark)
+    in.addData(evenKeys(100).map(k => (k, "b")) ++ Seq((400002L, "c")): _*)
+    in.toDF().toDF("k", "v")
+      .writeStream.format("docstore").option("path", target)
+      .option("mode", "upsert").option("keys", "k")
+      .option("checkpointLocation", tmpDir("docstore_bloom_upsert_cp"))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val got = spark.read.format("docstore").option("path", target).load()
+    assert(got.count() == evenKeys(300).distinct.size + 1)
+    assert(got.filter(col("v") === "b").count() == evenKeys(100).distinct.size)
+    assertFiltered(DocStore.listFiles(target).filterNot(before), "k")
+  }
+
+  test("bloomFor is recorded once: other columns fail naming the record, recorded names in any case are no-ops") {
+    import spark.implicits._
+    val store = tmpDir("docstore_bloom_record")
+    def append(bloomFor: Option[String], salt: Long): Unit = {
+      val w = evenKeys(200, salt).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1)
+        .write.format("docstore").option("path", store)
+      bloomFor.fold(w)(b => w.option("bloomFor", b)).mode("append").save()
+    }
+    append(Some("k"), 0L)
+    assert(bloomRecord(store) == Seq("k"))
+    val e = intercept[Exception](append(Some("v"), 1L))
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+    assert(msg.contains("'v'") && msg.contains("[k]"), msg)
+    assert(DocStore.listFiles(store).size == 1, "the refused write published files")
+    append(Some("K"), 2L)
+    append(None, 3L)
+    assert(bloomRecord(store) == Seq("k"))
+    assertFiltered(DocStore.listFiles(store), "k")
+  }
+
+  test("ALTER TABLE RENAME/DROP COLUMN carry the bloom record; the next append filters the new name") {
+    import spark.implicits._
+    val root = tmpDir("docstore_bloom_alter")
+    ensureCat("bl_alter", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS bl_alter.db")
+    spark.sql("""CREATE TABLE bl_alter.db.t (k BIGINT, v STRING, w BIGINT)
+      USING docstore TBLPROPERTIES ('rowlevel'='mor')""")
+    evenKeys(200).map(k => (k, s"v$k", k)).toDF("k", "v", "w").coalesce(1)
+      .writeTo("bl_alter.db.t").option("bloomFor", "k,w").append()
+    val path = s"$root/db/t"
+    assert(bloomRecord(path) == Seq("k", "w"))
+    spark.sql("ALTER TABLE bl_alter.db.t RENAME COLUMN k TO key")
+    spark.sql("ALTER TABLE bl_alter.db.t DROP COLUMN w")
+    assert(bloomRecord(path) == Seq("key"))
+    val before = DocStore.listFiles(path).toSet
+    evenKeys(200, 5L).map(k => (k, s"v$k")).toDF("key", "v").coalesce(1)
+      .writeTo("bl_alter.db.t").append()
+    assertFiltered(DocStore.listFiles(path).filterNot(before), "key")
+  }
+
+  test("orphanSweep and vacuum leave the bloom record in place") {
+    import spark.implicits._
+    val store = tmpDir("docstore_bloom_vacuum")
+    (0 until 2).foreach { b =>
+      evenKeys(100, b.toLong).map(k => (k, "x")).toDF("k", "v").coalesce(1)
+        .write.format("docstore").option("path", store).option("snapshots", "true")
+        .option("bloomFor", "k").mode("overwrite").save()
+    }
+    graft.sources.DocStoreMaintenance.orphanSweep(store, graceMs = 0L)
+    graft.sources.DocStoreMaintenance.vacuum(store, keepVersions = 1, graceMs = 0L)
+    assert(bloomRecord(store) == Seq("k"))
+    evenKeys(100, 9L).map(k => (k, "y")).toDF("k", "v").coalesce(1)
+      .write.format("docstore").option("path", store).mode("append").save()
+    assertFiltered(DocStore.listFiles(store), "k")
+  }
+
   // ---- aggregate pushdown (r13) ----
 
   test("ungrouped count/min/max answer from footer statistics only") {

@@ -93,6 +93,8 @@ class EtlSpec extends SparkSpec {
       .count()
     val back = spark.read.parquet(s"$out/lineitem")
     assert(back.count() == expected)
+    // the observed count the export reports is the same number
+    assert(results.collect { case Right(r) if r.table == "lineitem" => r.rows } == Seq(expected))
 
     // hive partition layout by string year + zstd files
     val dirs = new java.io.File(s"$out/lineitem").listFiles().filter(_.isDirectory).map(_.getName)
