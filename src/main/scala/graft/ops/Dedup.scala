@@ -1244,7 +1244,7 @@ object Dedup {
     * signature collision on differing states is ~2⁻⁶⁴ — far below any
     * hardware-error floor. */
   private val sigSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def sigCheckpoint(df: DataFrame, key: Seq[String]): (DataFrame, (Long, Long)) = {
+  private[graft] def sigCheckpoint(df: DataFrame, key: Seq[String]): (DataFrame, (Long, Long)) = {
     val obs = new org.apache.spark.sql.Observation(s"cc_sig_${sigSeq.incrementAndGet()}")
     val ck = df.observe(obs,
         count(lit(1)).as("n"),

@@ -39,7 +39,7 @@ object Graph {
     * the old aggregate and this observation are exactly 0.0); the
     * tri-scale oracle sweep pins the equivalence. */
   private val prSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def cutObservingDangling(df: DataFrame): (DataFrame, Double) = {
+  private[graft] def cutObservingDangling(df: DataFrame): (DataFrame, Double) = {
     val obs = new org.apache.spark.sql.Observation(
       s"pr_dang_${prSeq.incrementAndGet()}")
     val ck = Skew.cut(df.observe(obs,

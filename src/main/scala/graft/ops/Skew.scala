@@ -57,7 +57,15 @@ object Skew {
     * garbage-collected — a context-build-time conf, which
     * [[graft.Session]] sets) or point the dir at storage
     * with a TTL/lifecycle rule. Local default mode has neither
-    * concern: localCheckpoint blocks die with the executors. */
+    * concern: localCheckpoint blocks die with the executors.
+    *
+    * The plan runs ONCE in either mode: an eager checkpoint of either
+    * kind materializes through `RDD.doCheckpoint`, one job (Spark
+    * 4.1), so an `observe` metric on `df` (PageRank's dangling mass,
+    * the components loops' signatures, PCA's block vector) counts
+    * each row once. GraphSpec pins this for both modes; a Spark whose
+    * eager reliable checkpoint counts first and then writes would run
+    * the plan twice and fail it. */
   def cut(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption("graft.checkpoint.dir") match {
       case Some(dir) if dir.nonEmpty =>

@@ -110,69 +110,7 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
 
   private def loadDataTable(ident: Identifier): Table = tablePath(ident) match {
     case None => throw new NoSuchTableException(ident)
-    case Some(p) =>
-      val marker = SchemaMarker.read(fs, p)
-      val inferred = DocStore.inferStoreSchema(p.toString)
-      // a populated store's footers win for DATA columns (catalog and
-      // path reads must never disagree); the marker covers the
-      // declared-but-still-empty window, remembers the partition
-      // routing, supplies the declared TYPE of each partition
-      // column — directory values are untyped text, and the reader
-      // casts them back per the table schema (PARTITIONED BY (y INT)
-      // reads as int through the catalog, as string via bare paths) —
-      // and carries ALTER TABLE's declared evolution: columns ADDED
-      // before any file holds them append at the end (files read them
-      // as null), and a marker bigint over inferred int is the
-      // declared WIDENING (old int pages widen at the reader)
-      val schema =
-        if (inferred.isEmpty) marker.map(_.schema).getOrElse(new StructType())
-        else marker match {
-          case Some(m0) =>
-            val m = m0.withIds
-            // COLUMN-ID translation first: a footer column under an
-            // OLD name folds into its id's CURRENT name (pre-rename
-            // files), a DROPPED id's column vanishes; old+new files
-            // then collapse to one field (int|bigint reconciles wide)
-            val translated = inferred.fields.toSeq.flatMap { f =>
-              if (m.partitionBy.contains(f.name)) Some(f)
-              else m.nameMap.get(f.name) match {
-                case Some(id) if m.dropped(id) => None
-                case Some(id) =>
-                  Some(f.copy(name = m.currentNameOf(id).getOrElse(f.name)))
-                case None => Some(f)
-              }
-            }
-            val dedup = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-            translated.foreach { f =>
-              dedup.get(f.name) match {
-                case None => dedup(f.name) = f
-                case Some(prev) =>
-                  val dt = (prev.dataType, f.dataType) match {
-                    case (IntegerType, LongType) | (LongType, IntegerType) => LongType
-                    case _ => prev.dataType
-                  }
-                  dedup(f.name) =
-                    prev.copy(dataType = dt, nullable = prev.nullable || f.nullable)
-              }
-            }
-            val merged = dedup.values.toSeq.map { f =>
-              if (m.partitionBy.contains(f.name))
-                m.schema.fields.find(_.name == f.name).getOrElse(f)
-              else m.schema.fields.find(_.name == f.name) match {
-                case Some(mf) if f.dataType == IntegerType &&
-                  mf.dataType == LongType => mf
-                case _ => f
-              }
-            }
-            val extras = m.schema.fields.filterNot(mf =>
-              dedup.contains(mf.name))
-            StructType(merged ++ extras)
-          case None => inferred
-        }
-      DocStoreTable(p.toString, schema,
-        marker.map(_.partitionBy).getOrElse(Nil),
-        rowLevelMode = marker.map(_.rowLevel).getOrElse("cow"),
-        renamedFrom = marker.map(_.withIds.renamedFrom).getOrElse(Map.empty))
+    case Some(p) => DocStoreCatalog.loadStore(p)
   }
 
   /** SQL time travel — `SELECT … FROM t VERSION AS OF 3`: load the
@@ -457,6 +395,81 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
     if (!cascade && fs.listStatus(p).nonEmpty)
       throw new IllegalStateException(s"namespace ${namespace(0)} is not empty")
     fs.delete(p, true)
+  }
+}
+
+object DocStoreCatalog {
+
+  /** The table a store root holds, as a catalog read sees it: the
+    * schema marker (declared schema, partition routing, row-level
+    * mode, column IDs) folded over the schema the store's files
+    * carry. The catalog's `loadTable` and compaction's read both load
+    * through here, so a rename or a declared type reads the same way
+    * in each. */
+  def loadStore(p: Path): DocStoreTable = {
+    val fs = p.getFileSystem(DocStore.hadoopConf)
+    val marker = SchemaMarker.read(fs, p)
+    val inferred = DocStore.inferStoreSchema(p.toString)
+    // a populated store's footers win for DATA columns (catalog and
+    // path reads must never disagree); the marker covers the
+    // declared-but-still-empty window, remembers the partition
+    // routing, supplies the declared TYPE of each partition
+    // column — directory values are untyped text, and the reader
+    // casts them back per the table schema (PARTITIONED BY (y INT)
+    // reads as int through the catalog, as string via bare paths) —
+    // and carries ALTER TABLE's declared evolution: columns ADDED
+    // before any file holds them append at the end (files read them
+    // as null), and a marker bigint over inferred int is the
+    // declared WIDENING (old int pages widen at the reader)
+    val schema =
+      if (inferred.isEmpty) marker.map(_.schema).getOrElse(new StructType())
+      else marker match {
+        case Some(m0) =>
+          val m = m0.withIds
+          // COLUMN-ID translation first: a footer column under an
+          // OLD name folds into its id's CURRENT name (pre-rename
+          // files), a DROPPED id's column vanishes; old+new files
+          // then collapse to one field (int|bigint reconciles wide)
+          val translated = inferred.fields.toSeq.flatMap { f =>
+            if (m.partitionBy.contains(f.name)) Some(f)
+            else m.nameMap.get(f.name) match {
+              case Some(id) if m.dropped(id) => None
+              case Some(id) =>
+                Some(f.copy(name = m.currentNameOf(id).getOrElse(f.name)))
+              case None => Some(f)
+            }
+          }
+          val dedup = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
+          translated.foreach { f =>
+            dedup.get(f.name) match {
+              case None => dedup(f.name) = f
+              case Some(prev) =>
+                val dt = (prev.dataType, f.dataType) match {
+                  case (IntegerType, LongType) | (LongType, IntegerType) => LongType
+                  case _ => prev.dataType
+                }
+                dedup(f.name) =
+                  prev.copy(dataType = dt, nullable = prev.nullable || f.nullable)
+            }
+          }
+          val merged = dedup.values.toSeq.map { f =>
+            if (m.partitionBy.contains(f.name))
+              m.schema.fields.find(_.name == f.name).getOrElse(f)
+            else m.schema.fields.find(_.name == f.name) match {
+              case Some(mf) if f.dataType == IntegerType &&
+                mf.dataType == LongType => mf
+              case _ => f
+            }
+          }
+          val extras = m.schema.fields.filterNot(mf =>
+            dedup.contains(mf.name))
+          StructType(merged ++ extras)
+        case None => inferred
+      }
+    DocStoreTable(p.toString, schema,
+      marker.map(_.partitionBy).getOrElse(Nil),
+      rowLevelMode = marker.map(_.rowLevel).getOrElse("cow"),
+      renamedFrom = marker.map(_.withIds.renamedFrom).getOrElse(Map.empty))
   }
 }
 

@@ -3,7 +3,9 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftshim.CatalystBridge
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Store maintenance: the jobs a 100 TB docstore deployment schedules
@@ -172,21 +174,29 @@ object DocStoreMaintenance {
   }
 
   /** Bin-pack the small files of every partition into one clustered
-    * file per partition. ONE distributed Spark job does all the data
-    * movement (each partition's small files are a union leg routed by
-    * the clustered docstore sink, so Spark writes exactly one output
-    * file per partition); the commit then publishes the replacements
-    * and retires the inputs — as a single atomic manifest swap on a
-    * snapshot store (readers see old or new, never a mix, and the
-    * pre-compaction version stays time-travelable until vacuum), or
-    * publish-before-retire on a plain store (the same transient-
-    * duplication-not-loss window as the copy-on-write commit).
+    * file per partition. The candidate files are read through the
+    * connector's own scan, pinned to the snapshot version whose
+    * listing and deletion vectors chose them: the store supplies the
+    * schema (no inference job), renamed and dropped columns resolve
+    * through the table's column IDs as a catalog read does, and the
+    * reader skips each file's deletion-vector positions split by
+    * split. The clustered docstore sink then writes exactly one file
+    * per partition: a shuffle plus the write, two jobs at most. The
+    * commit publishes the replacements and retires the inputs — as a
+    * single atomic manifest swap on a snapshot store (readers see old
+    * or new, never a mix; the pre-compaction version stays
+    * time-travelable until vacuum), or publish-before-retire on a
+    * plain store (the same transient-duplication-not-loss window as
+    * the copy-on-write commit). A concurrent commit that retired an
+    * input or moved its deletion vector since the pinned version
+    * aborts the swap.
     *
-    * Only partitions holding ≥2 files under `smallerThan` bytes are
-    * touched; everything else keeps its files byte-identical.
-    * Partition values re-attach as exact string literals (the
-    * directory text, not re-inferred types), so values like "00123"
-    * round-trip exactly. */
+    * Only partitions holding ≥2 files under `smallerThan` bytes (or a
+    * qualifying deletion vector) are touched; everything else keeps
+    * its files byte-identical. Partition columns read as their
+    * directory text (strings, not the table's declared types), so
+    * values like "00123" and the Hive default partition round-trip
+    * exactly. */
   def compact(
       spark: SparkSession,
       path: String,
@@ -197,9 +207,13 @@ object DocStoreMaintenance {
     val conf = DocStore.hadoopConf
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val listing = DocStore.listFilesWithPartitions(path)
+    // one version for the listing, the deletion vectors, the read and
+    // the commit's conflict check
+    val readVersion =
+      if (DocStore.snapshotEnabled(path)) DocStore.currentSnapshot(path).map(_._1)
+      else None
+    val listing = DocStore.listFilesWithPartitions(path, readVersion)
     if (listing.isEmpty) return CompactStats(0, 0, 0, None)
-    val partKeys = listing.head._2.map(_._1)
     // deletion vectors MATERIALIZE here: a DV'd file is a compaction
     // candidate regardless of size (its vector's rows drop from the
     // rewrite and the binding dies with the retired file), which is
@@ -209,9 +223,9 @@ object DocStoreMaintenance {
     // rewriting a 1 GB file to drop 3 rows is the wrong trade; the
     // fraction reads from the DV header + manifest `#stat` rows, no
     // data or position bytes touched.
-    val dvs = DocStore.dvMap(path, None)
+    val dvs = DocStore.dvMap(path, readVersion)
     lazy val statRows: Map[String, Long] =
-      DocStore.manifestStats(path, None).map { case (r, s) => r -> s.rows }
+      DocStore.manifestStats(path, readVersion).map { case (r, s) => r -> s.rows }
     def dvQualifies(f: String): Boolean = {
       val rel = DocStore.relOf(path, f)
       dvs.get(rel).exists { dvRel =>
@@ -238,17 +252,22 @@ object DocStoreMaintenance {
       .sortBy(_._1.map(_._2).mkString("/"))
     if (bins.isEmpty) return CompactStats(0, 0, 0, None)
 
-    // one job: per-partition legs, partition columns re-attached as
-    // exact string literals, routed by the clustered sink → exactly
-    // one staged file per partition
+    val partKeys = bins.head._1.map(_._1)
+    require(bins.forall(_._1.map(_._1) == partKeys),
+      s"docstore: compaction of $path found candidate files under " +
+        "different partition layouts (partition evolution); compact " +
+        "one layout at a time")
+
     val token = java.util.UUID.randomUUID().toString.take(8)
     val stagingStore = s"$path/_compact-$token"
-    val legs = bins.map { case (pv, files) =>
-      pv.foldLeft(readWithDvsApplied(spark, path, files.map(_._1), dvs)) {
-        case (df, (k, v)) => df.withColumn(k, lit(v))
-      }
-    }
-    val all0 = legs.reduce(_ unionByName _)
+    val table = DocStoreCatalog.loadStore(root)
+    val all0 = CatalystBridge.ofRows(spark, DataSourceV2Relation.create(
+      table.copy(
+        tableSchema = StructType(table.tableSchema.map(f =>
+          if (partKeys.contains(f.name)) f.copy(dataType = StringType) else f)),
+        versionAsOf = readVersion,
+        onlyFiles = Some(bins.flatMap(_._2.map(_._1)).toSet)),
+      None, None, CaseInsensitiveStringMap.empty()))
     // an UNPARTITIONED store has no cluster keys to route one file per
     // partition — bin-pack by sizing the shuffle to the input bytes
     // (⌈total/smallerThan⌉ output files), else the staged write keeps
@@ -405,35 +424,6 @@ object DocStoreMaintenance {
     }
     stale.foreach(s => fs.delete(s.getPath, true))
     n + stale.size
-  }
-
-  /** Read `files` with their deletion vectors applied — the compaction
-    * input. DV-free files read plain; DV'd files drop their vector's
-    * positions via an anti-join on the builtin reader's hidden
-    * (_metadata.file_name, row_index) pair (names are UUID-unique
-    * within a store). */
-  private def readWithDvsApplied(spark: SparkSession, path: String,
-      files: Seq[String], dvs: Map[String, String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (dved, plain) = files.partition(f => dvs.contains(DocStore.relOf(path, f)))
-    val plainDf = if (plain.isEmpty) None else Some(spark.read.parquet(plain: _*))
-    val dvedDf =
-      if (dved.isEmpty) None
-      else {
-        import spark.implicits._
-        val pairs = dved.flatMap { f =>
-          val rel = DocStore.relOf(path, f)
-          val name = rel.split("/").last
-          DocStore.readDv(new Path(path, dvs(rel)).toString).map(p => (name, p))
-        }
-        val posDf = pairs.toDF("__dv_name", "__dv_idx")
-        val base = spark.read.parquet(dved: _*)
-        Some(base.join(posDf,
-          base("_metadata.file_name") === posDf("__dv_name") &&
-            base("_metadata.row_index") === posDf("__dv_idx"),
-          "left_anti"))
-      }
-    (plainDf.toSeq ++ dvedDf.toSeq).reduce(_ unionByName _)
   }
 
   /** Reap `_deletes/` sidecars referenced by NO manifest in `kept`,

@@ -166,7 +166,10 @@ case class DocStoreTable(path: String, tableSchema: StructType,
     rowLevelMode: String = "cow",
     // RENAME evolution (catalog tables): current name → older names of
     // the same column ID, so pre-rename files read under the new name
-    renamedFrom: Map[String, Seq[String]] = Map.empty)
+    renamedFrom: Map[String, Seq[String]] = Map.empty,
+    // reads list only these absolute file paths (compaction reads its
+    // bins through the scan); None = every file of the read version
+    onlyFiles: Option[Set[String]] = None)
     extends Table with SupportsRead with SupportsWrite
     with SupportsDelete with SupportsRowLevelOperations
     with SupportsMetadataColumns {
@@ -245,7 +248,7 @@ case class DocStoreTable(path: String, tableSchema: StructType,
         .orElse(Option(options.get("tag"))
           .map(t => DocStore.tagVersion(path, t.trim)))
         .orElse(versionAsOf),
-      renamedFrom)
+      renamedFrom, onlyFiles)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new DocStoreWriteBuilder(path, info, tablePartitionBy, tableSchema)
 
@@ -336,7 +339,8 @@ case class DocStoreTable(path: String, tableSchema: StructType,
 class DocStoreScanBuilder(path: String, tableSchema: StructType,
     streamOpts: DocStore.StreamOpts = DocStore.StreamOpts(),
     versionAsOf: Option[Long] = None,
-    renames: Map[String, Seq[String]] = Map.empty)
+    renames: Map[String, Seq[String]] = Map.empty,
+    onlyFiles: Option[Set[String]] = None)
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
@@ -436,7 +440,7 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
   override def isPartiallyPushed(): Boolean = true
 
   // one dir walk (or manifest read), cached for the builder's lifetime
-  private lazy val listing = DocStore.listFilesWithPartitions(path, versionAsOf)
+  private lazy val listing = DocStore.listFilesWithPartitions(path, versionAsOf, onlyFiles)
   private lazy val partCols: Set[String] =
     DocStore.partColsOf(listing).toSet
 
@@ -479,6 +483,8 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
     // deleted rows; a min/max row may be deleted) — the aggregate
     // stays in Spark and the scan applies the DVs row-side
     if (DocStore.dvMap(path, versionAsOf).nonEmpty) return false
+    // the statistics scan answers for the whole read version
+    if (onlyFiles.isDefined) return false
     val grpRefs = agg.groupByExpressions.toSeq.map(e =>
       DocStore.flatRef(e).filter(partCols))
     if (grpRefs.exists(_.isEmpty)) return false
@@ -570,7 +576,7 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
     case None =>
       DocStoreScan(path, tableSchema, required, pushed, streamOpts,
         limitHint = limit, topNHint = topN, versionAsOf = versionAsOf,
-        renames = renames)
+        renames = renames, onlyFiles = onlyFiles)
   }
 }
 
@@ -592,13 +598,14 @@ case class DocStoreScan(
     // RENAME evolution: current column name → its older names (column
     // IDs resolved through the catalog's schema marker) — the reader
     // resolves each file's physical column through this chain
-    renames: Map[String, Seq[String]] = Map.empty)
+    renames: Map[String, Seq[String]] = Map.empty,
+    onlyFiles: Option[Set[String]] = None)
     extends Scan with Batch
     with SupportsReportStatistics with SupportsRuntimeFiltering
     with SupportsReportPartitioning {
 
   @transient private lazy val listing =
-    DocStore.listFilesWithPartitions(path, versionAsOf)
+    DocStore.listFilesWithPartitions(path, versionAsOf, onlyFiles)
   @transient private lazy val partColsOrdered: Seq[String] =
     DocStore.partColsOf(listing)
   @transient private lazy val partCols: Set[String] = partColsOrdered.toSet
@@ -3384,9 +3391,12 @@ object DocStore {
   def listFilesWithPartitions(path: String): Seq[(String, Seq[(String, String)])] =
     listFilesWithPartitions(path, None)
 
-  def listFilesWithPartitions(path: String, versionAsOf: Option[Long])
-      : Seq[(String, Seq[(String, String)])] = {
+  /** The listing at `versionAsOf` (None = current), restricted to
+    * `files` (absolute paths as listed) when given. */
+  def listFilesWithPartitions(path: String, versionAsOf: Option[Long],
+      files: Option[Set[String]] = None): Seq[(String, Seq[(String, String)])] = {
     val out = listFilesWithPartitionsUnchecked(path, versionAsOf)
+      .filter(f => files.forall(_(f._1)))
     out.headOption.foreach { case (f0, pv0) =>
       val keys0 = pv0.map(_._1)
       // DECLARED partition evolution (a `#partspec` manifest line at

@@ -1736,4 +1736,132 @@ class DocStoreSpec extends SparkSpec {
       spark.read.parquet(s"$sfDir/orders.parquet")
         .filter(year(col("o_orderdate")) === 1996).count())
   }
+
+  // ---- compaction reads through the connector's own scan ----
+
+  test("compaction keeps a renamed column: values survive, the file is physically the new name, with its filter") {
+    import spark.implicits._
+    val root = tmpDir("docstore_compact_rename")
+    ensureCat("cp_rename", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS cp_rename.db")
+    spark.sql("""CREATE TABLE cp_rename.db.t (k BIGINT, price DOUBLE)
+      USING docstore TBLPROPERTIES ('rowlevel'='mor')""")
+    Seq((1L, 10.0), (2L, 20.0)).toDF("k", "price").coalesce(1)
+      .writeTo("cp_rename.db.t").option("bloomFor", "price").append()
+    spark.sql("ALTER TABLE cp_rename.db.t RENAME COLUMN price TO amount")
+    spark.sql("INSERT INTO cp_rename.db.t VALUES (3L, 30.0)")
+    val path = s"$root/db/t"
+    val st = graft.sources.DocStoreMaintenance.compact(spark, path)
+    assert(st.filesIn == 2 && st.filesOut == 1, s"compaction: $st")
+    assert(spark.table("cp_rename.db.t").as[(Long, Double)].collect().toSeq.sorted ==
+      Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)))
+    val files = DocStore.listFiles(path)
+    assert(files.size == 1 && files.head.contains("compact-"), s"live files: $files")
+    val physical = DocStore.fileSchema(files.head)
+    assert(physical.containsField("amount") && !physical.containsField("price"),
+      s"compacted file schema: $physical")
+    assert(bloomChunks(files.head, "amount").forall(_.getBloomFilterOffset >= 0),
+      "the compacted file has no bloom filter on the renamed column")
+  }
+
+  test("compaction keeps an added column: new values survive, older rows read NULL") {
+    import spark.implicits._
+    val store = tmpDir("docstore_compact_added")
+    def append(df: org.apache.spark.sql.DataFrame, merge: Boolean): Unit =
+      df.coalesce(1).write.format("docstore").option("path", store)
+        .option("snapshots", "true").option("mergeSchema", merge.toString)
+        .mode("append").save()
+    append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), merge = false)
+    append(Seq((3L, "c")).toDF("k", "v"), merge = false)
+    append(Seq((4L, "d", 40L), (5L, "e", 50L)).toDF("k", "v", "w"), merge = true)
+    def answer() = spark.read.format("docstore").option("path", store).load()
+      .select("k", "v", "w").as[(Long, String, Option[Long])].collect().toSeq.sorted
+    val expected = Seq((1L, "a", None), (2L, "b", None), (3L, "c", None),
+      (4L, "d", Some(40L)), (5L, "e", Some(50L)))
+    assert(answer() == expected)
+    val st = graft.sources.DocStoreMaintenance.compact(spark, store)
+    assert(st.filesIn == 3 && st.filesOut == 1, s"compaction: $st")
+    assert(answer() == expected, "compaction lost the added column's values")
+  }
+
+  test("compaction keeps partition directory text exactly: 00123 and the Hive default partition") {
+    import spark.implicits._
+    val store = tmpDir("docstore_compact_parttext")
+    (0 until 2).foreach { b =>
+      Seq((b * 10L + 1, "00123"), (b * 10L + 2, null), (b * 10L + 3, "7"))
+        .toDF("k", "p").coalesce(1)
+        .write.format("docstore").option("path", store)
+        .option("partitionBy", "p").mode("append").save()
+    }
+    def dirs() = DocStore.listFilesWithPartitions(store).map(_._2).distinct.sortBy(_.toString)
+    def answer() = spark.read.format("docstore").option("path", store).load()
+      .select("k", "p").as[(Long, Option[String])].collect().toSeq.sorted
+    val (dirsBefore, before) = (dirs(), answer())
+    assert(dirsBefore.map(_.head._2).toSet ==
+      Set("00123", DocStore.HiveDefaultPartition, "7"))
+    val st = graft.sources.DocStoreMaintenance.compact(spark, store)
+    assert(st.filesIn == 6 && st.filesOut == 3, s"compaction: $st")
+    assert(DocStore.listFiles(store).forall(_.contains("compact-")))
+    assert(dirs() == dirsBefore, s"directory text moved: $dirsBefore -> ${dirs()}")
+    assert(answer() == before)
+  }
+
+  /** A 4-partition merge-on-read catalog table with deletion vectors
+    * in every partition: (path, the rows it holds). */
+  private def morStoreWithDvs(cat: String): (String, Seq[(Long, String, Int)]) = {
+    import spark.implicits._
+    val root = tmpDir(s"docstore_$cat")
+    ensureCat(cat, root)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    spark.sql(s"""CREATE TABLE $cat.db.t (k BIGINT, v STRING, p INT)
+      USING docstore PARTITIONED BY (p) TBLPROPERTIES ('rowlevel'='mor')""")
+    (0 until 2).foreach { b =>
+      (0L until 40L).map(i => (b * 100L + i, s"v$i", (i % 4).toInt))
+        .toDF("k", "v", "p").writeTo(s"$cat.db.t").append()
+    }
+    spark.sql(s"DELETE FROM $cat.db.t WHERE k % 5 = 0")
+    val path = s"$root/db/t"
+    assert(DocStore.dvMap(path, None).size == 8, "every file should carry a deletion vector")
+    val rows = for (b <- 0 until 2; i <- 0L until 40L if (b * 100L + i) % 5 != 0)
+      yield (b * 100L + i, s"v$i", (i % 4).toInt)
+    (path, rows.sorted)
+  }
+
+  test("compaction drops the deleted rows of deletion-vector files and leaves no vector live") {
+    import spark.implicits._
+    val (path, expected) = morStoreWithDvs("cp_dv")
+    def answer() = spark.table("cp_dv.db.t").as[(Long, String, Int)].collect().toSeq.sorted
+    assert(answer() == expected)
+    val st = graft.sources.DocStoreMaintenance.compact(spark, path)
+    assert(st.partitionsCompacted == 4 && st.filesIn == 8 && st.filesOut == 4, s"compaction: $st")
+    assert(DocStore.dvMap(path, None).isEmpty, "deletion vectors still live after compaction")
+    assert(answer() == expected)
+    assert(spark.read.format("docstore").option("path", path).load().count() == expected.size)
+  }
+
+  test("compaction of a 4-partition store with deletion vectors starts at most 2 jobs, none a parquet schema read") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftshim.CatalystBridge
+    val (path, expected) = morStoreWithDvs("cp_jobs")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e): Unit
+    }
+    val st = withConf("spark.sql.adaptive.enabled", "true") {
+      CatalystBridge.waitForListeners(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try graft.sources.DocStoreMaintenance.compact(spark, path)
+      finally {
+        CatalystBridge.waitForListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+    assert(st.filesIn == 8 && st.filesOut == 4, s"compaction: $st")
+    import scala.jdk.CollectionConverters._
+    val sites = jobs.asScala.toSeq.map(_.stageInfos.map(_.details).mkString("\n"))
+    assert(jobs.size <= 2, s"compaction started ${jobs.size} jobs:\n${sites.mkString("\n---\n")}")
+    assert(!sites.exists(_.contains("DataFrameReader.parquet")),
+      s"a compaction job came from a parquet read:\n${sites.mkString("\n---\n")}")
+    assert(spark.table("cp_jobs.db.t").count() == expected.size)
+  }
 }

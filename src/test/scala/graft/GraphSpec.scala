@@ -100,4 +100,60 @@ class GraphSpec extends SparkSpec {
     assert(got.map(_._2).sum / 3 === 4)
   }
 
+  test("a reliable-checkpoint cut observes once: dangling mass, ranks and signatures match the local cut") {
+    import spark.implicits._
+    // 5 nodes; node 4 has no out-edges, so every round has dangling mass
+    val edges = Seq((0L, 1L, 0.5), (0L, 2L, 0.5), (1L, 2L, 1.0), (2L, 0L, 0.5),
+      (2L, 3L, 0.5), (3L, 4L, 1.0)).toDF("src", "dst", "p")
+    val n = 5
+    def run(): (Seq[Double], Seq[(Long, Double)], (Long, Long)) = {
+      val nodesF = (0L until n.toLong).toDF("id")
+        .join(edges.select(col("src").as("id")).distinct()
+          .withColumn("__o", lit(true)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__o"), lit(false)).as("has_out"))
+      var (ranks, dang) = ops.Graph.cutObservingDangling(
+        nodesF.withColumn("rank", lit(1.0 / n)))
+      val dangs = Seq.newBuilder[Double] += dang
+      for (_ <- 1 to 3) {
+        val contribs = ranks.join(edges, ranks("id") === edges("src"))
+          .groupBy(col("dst").as("id")).agg(sum(col("rank") * col("p")).as("contrib"))
+        val (nr, nd) = ops.Graph.cutObservingDangling(nodesF
+          .join(contribs, Seq("id"), "left")
+          .select(col("id"), col("has_out"),
+            (lit(0.15 / n) + lit(0.85) *
+              (coalesce(col("contrib"), lit(0.0)) + lit(dang / n))).as("rank")))
+        ranks = nr
+        dang = nd
+        dangs += nd
+      }
+      val sig = ops.Dedup.sigCheckpoint(ranks.select("id"), Seq("id"))._2
+      (dangs.result(), ranks.as[(Long, Boolean, Double)].collect().toSeq
+        .map(r => (r._1, r._3)).sorted, sig)
+    }
+    val local = run()
+    // Skew.cut seeds the context's checkpoint dir only when it is unset:
+    // leave it as found, or later suites' reliable cuts write here
+    val sc = spark.sparkContext
+    val ckBefore = sc.getCheckpointDir
+    val reliable =
+      try withConf("graft.checkpoint.dir", tmpDir("graph_reliable_cut")) {
+        val r = run()
+        val ckDir = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+        assert(ckDir.getFileSystem(sc.hadoopConfiguration).listStatus(ckDir)
+          .exists(_.getPath.getName.startsWith("rdd-")),
+          s"the reliable run wrote no checkpoint under $ckDir")
+        r
+      } finally if (ckBefore.isEmpty) sc.setCheckpointDir(null)
+    assert(math.abs(local._1.head - 1.0 / n) < 1e-12, s"round-0 dangling mass ${local._1}")
+    assert(math.abs(local._2.map(_._2).sum - 1.0) < 1e-9, s"mass drifted: ${local._2}")
+    assert(local._3._1 == n.toLong)
+    assert(reliable._3 == local._3, s"signature: reliable ${reliable._3} vs local ${local._3}")
+    local._1.zip(reliable._1).foreach { case (a, b) =>
+      assert(math.abs(a - b) < 1e-12, s"dangling mass: reliable ${reliable._1} vs local ${local._1}")
+    }
+    local._2.zip(reliable._2).foreach { case ((i, a), (j, b)) =>
+      assert(i == j && math.abs(a - b) < 1e-12, s"ranks: reliable ${reliable._2} vs local ${local._2}")
+    }
+  }
+
 }
