@@ -196,7 +196,14 @@ object DocStoreMaintenance {
     * its files byte-identical. Partition columns read as their
     * directory text (strings, not the table's declared types), so
     * values like "00123" and the Hive default partition round-trip
-    * exactly. */
+    * exactly; a partition column of another layout (an evolved spec)
+    * is not written into the rewrite.
+    *
+    * The table loads as a catalog read loads it: a snapshot store's
+    * schema comes from its manifest, but a plain store opens the
+    * footer of every live file on the driver and requires one schema
+    * across them all — the cost any read of the store already pays,
+    * so a schema drift outside the bins aborts the compaction too. */
   def compact(
       spark: SparkSession,
       path: String,
@@ -261,13 +268,20 @@ object DocStoreMaintenance {
     val token = java.util.UUID.randomUUID().toString.take(8)
     val stagingStore = s"$path/_compact-$token"
     val table = DocStoreCatalog.loadStore(root)
-    val all0 = CatalystBridge.ofRows(spark, DataSourceV2Relation.create(
+    // the table's data columns plus the bins' own partition keys: a
+    // partition column of another layout (a spec evolved y -> y,m)
+    // reads null here and would otherwise land in the rewrite as a
+    // physical data column
+    val otherPartCols =
+      (DocStore.partColsOf(listing) ++ table.tablePartitionBy).toSet -- partKeys
+    val read = CatalystBridge.ofRows(spark, DataSourceV2Relation.create(
       table.copy(
         tableSchema = StructType(table.tableSchema.map(f =>
           if (partKeys.contains(f.name)) f.copy(dataType = StringType) else f)),
         versionAsOf = readVersion,
         onlyFiles = Some(bins.flatMap(_._2.map(_._1)).toSet)),
       None, None, CaseInsensitiveStringMap.empty()))
+    val all0 = read.drop(otherPartCols.toSeq: _*)
     // an UNPARTITIONED store has no cluster keys to route one file per
     // partition — bin-pack by sizing the shuffle to the input bytes
     // (⌈total/smallerThan⌉ output files), else the staged write keeps

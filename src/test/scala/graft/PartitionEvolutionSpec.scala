@@ -61,6 +61,41 @@ class PartitionEvolutionSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("compaction of an old-layout bin after y -> y,m writes no physical m and keeps the schema (k,v,y,m)") {
+    import spark.implicits._
+    val store = tmpDir("partevo_compact")
+    def append(df: org.apache.spark.sql.DataFrame, partitionBy: Option[String]): Unit = {
+      val w = df.coalesce(1).write.format("docstore").option("path", store)
+        .option("snapshots", "true")
+      partitionBy.fold(w)(p => w.option("partitionBy", p)).mode("append").save()
+    }
+    // two small gen-1 files in y=2020: the one compaction bin
+    append(Seq((1L, "a", "2020")).toDF("k", "v", "y"), Some("y"))
+    append(Seq((2L, "b", "2020")).toDF("k", "v", "y"), Some("y"))
+    DocStoreMaintenance.setPartitionSpec(store, Seq("y", "m")): Unit
+    // one gen-2 file per (y, m) partition: no bin of their own
+    append(Seq((3L, "c", "2021", "01")).toDF("k", "v", "y", "m"), None)
+    def read() = spark.read.format("docstore").option("path", store).load()
+    def answer() = read().select("k", "v", "y", "m")
+      .as[(Long, String, String, Option[String])].collect().toSeq.sorted
+    val expected = Seq((1L, "a", "2020", None), (2L, "b", "2020", None),
+      (3L, "c", "2021", Some("01")))
+    assert(answer() == expected)
+    val st = DocStoreMaintenance.compact(spark, store)
+    assert(st.filesIn == 2 && st.filesOut == 1, s"compaction: $st")
+    val compacted = DocStore.listFiles(store).filter(_.contains("compact-"))
+    assert(compacted.size == 1 && compacted.head.contains("y=2020") &&
+      !compacted.head.contains("m="), s"compacted files: $compacted")
+    val physical = DocStore.toStructType(DocStore.fileSchema(compacted.head)).fieldNames.toSeq
+    assert(physical == Seq("k", "v"), s"compacted file columns: $physical")
+    assert(read().schema.fieldNames.toSeq == Seq("k", "v", "y", "m"))
+    assert(answer() == expected)
+    // the next commit reconciles its schema over the compacted file too
+    append(Seq((4L, "d", "2021", "02")).toDF("k", "v", "y", "m"), None)
+    assert(read().schema.fieldNames.toSeq == Seq("k", "v", "y", "m"))
+    assert(answer() == expected :+ ((4L, "d", "2021", Some("02"))))
+  }
+
   test("catalog table: CALL set_partition_spec re-routes inserts and extends the declared schema") {
     if (spark.conf.getOption("spark.sql.catalog.pevo").isEmpty) {
       spark.conf.set("spark.sql.catalog.pevo", "graft.sources.DocStoreCatalog")
