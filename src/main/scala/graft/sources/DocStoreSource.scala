@@ -8,12 +8,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
 import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -180,8 +182,8 @@ case class DocStoreTable(path: String, tableSchema: StructType,
   /** Hidden lineage columns every CDC / debugging / audit workflow
     * selects: `_file` (the source file's path — split-constant, costs
     * nothing) and `_pos` (the row's 0-based position within that file
-    * — the split's first-row index plus a reader-side counter, still
-    * zero extra I/O). Hidden per the DSv2 contract: they join the scan
+    * — parquet's own row index, which counts the rows its filters
+    * skip, still zero extra I/O). Hidden per the DSv2 contract: they join the scan
     * output only when explicitly referenced, so an unadorned
     * `SELECT *` — and every existing plan — is byte-identical with or
     * without them (DocStoreSpec pins the no-cost property). A data
@@ -951,9 +953,7 @@ case class DocStoreScan(
       }
     val parts = ArrayBuffer.empty[InputPartition]
     var covered = 0L
-    var firstRow = 0L
     pruned.foreach { case (f, pv) =>
-      firstRow = 0L
       // store-relative name only where a manifest consumer needs it —
       // single-FILE stores (path = one .parquet) have no rel form
       lazy val rel = DocStore.relOf(path, f)
@@ -970,11 +970,9 @@ case class DocStoreScan(
         if (lim.forall(covered < _) && keep((f, b.getStartingPos))) {
           val off = b.getStartingPos
           parts += DocStorePartition(f, off,
-            b.getCompressedSize, pv, types, firstRowIndex = firstRow,
-            commitVersion = ver, dvFile = dv)
+            b.getCompressedSize, pv, types, commitVersion = ver, dvFile = dv)
           covered += b.getRowCount
         }
-        firstRow += b.getRowCount
       }
     }
     parts.toArray
@@ -1028,10 +1026,6 @@ case class DocStorePartition(
     length: Long,
     partValues: Seq[(String, String)],
     partTypes: Seq[DataType] = Nil,
-    // index of this row group's first row within its FILE (sum of the
-    // preceding row groups' counts) — the base for the `_pos` metadata
-    // column; -1 when the planning path didn't compute it
-    firstRowIndex: Long = -1L,
     // split-constant change-feed lineage for the `_change_type` /
     // `_commit_version` metadata columns: batch scans and plain
     // streams are always inserts; -1 = version unknown (emits null)
@@ -1042,8 +1036,8 @@ case class DocStorePartition(
     // listed positions (merge-on-read). With `dvEmitDeleted` the
     // reader instead EMITS ONLY the positions of dvFile that are NOT
     // in dvPrevFile (the previous version's DV, when one existed) —
-    // the change feed's "rows deleted by this commit" read. Requires
-    // firstRowIndex >= 0 (positions are file-global).
+    // the change feed's "rows deleted by this commit" read. Positions
+    // are file-global: the reader takes them from parquet's row index.
     dvFile: Option[String] = None,
     dvPrevFile: Option[String] = None,
     dvEmitDeleted: Boolean = false) extends InputPartition with HasPartitionKey {
@@ -1077,7 +1071,10 @@ case class DocStoreReaderFactory(
   * selects exactly this partition's row group (parquet assigns a row
   * group to the range containing its midpoint), so two partitions
   * never read the same row twice. Partition-column values are emitted
-  * as split-constant strings recovered from the directory layout. */
+  * as split-constant strings recovered from the directory layout.
+  * Opening a split builds no Hadoop Configuration: the file is opened
+  * through [[DocStore.hadoopConf]], and the projection rides the read
+  * support, not a conf key. */
 class DocStoreReader(
     part: DocStorePartition,
     projectCols: Array[String],
@@ -1086,7 +1083,6 @@ class DocStoreReader(
     pushed: Array[Filter],
     renames: Map[String, Seq[String]] = Map.empty) extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration(DocStore.hadoopConf)
   private val fileSchema = DocStore.fileSchema(part.file)
   private val partVals = part.partValues.toMap
   private val projSet = projectCols.toSet
@@ -1130,8 +1126,8 @@ class DocStoreReader(
   }
 
   // metadata columns: 1 = `_file` (split-constant path), 2 = `_pos`
-  // (file row position = split's first-row index + in-split counter);
-  // shadowed by same-named data/partition columns per the DSv2 rule
+  // (file row position, parquet's own row index); shadowed by
+  // same-named data/partition columns per the DSv2 rule
   private val metaKind: Array[Int] = required.fields.map { f =>
     if (projSet.contains(f.name) || partVals.contains(f.name)) 0
     else if (f.name == "_file") 1
@@ -1143,7 +1139,7 @@ class DocStoreReader(
   private val needPos = metaKind.contains(2)
 
   // Deletion-vector application. Positions are file-global and sorted;
-  // rowIdx increases strictly within a split, so one monotone pointer
+  // the row index increases strictly within a split, so one monotone pointer
   // replaces any per-row set lookup. Exclude mode (dvFile only) skips
   // the deleted positions — the merge-on-read data scan; delta mode
   // (dvPrevFile too) emits ONLY positions newly deleted since the
@@ -1153,8 +1149,6 @@ class DocStoreReader(
   private val dvPositions: Array[Long] = part.dvFile match {
     case None => Array.emptyLongArray
     case Some(f) =>
-      require(part.firstRowIndex >= 0L,
-        "docstore: deletion-vector split planned without a first-row index")
       val cur = DocStore.readDv(f)
       part.dvPrevFile match {
         case None => cur
@@ -1183,7 +1177,6 @@ class DocStoreReader(
   private val changeTypeStr = UTF8String.fromString(part.changeType)
   private val commitVer: Any =
     if (part.commitVersion >= 0L) part.commitVersion else null
-  private var rowIdx: Long = math.max(part.firstRowIndex, 0L) - 1
 
   /** Pushed data filters convert to a parquet predicate only when this
     * file carries every referenced column at the table's exact type —
@@ -1200,29 +1193,26 @@ class DocStoreReader(
       }
     }
 
-  /** The reader evaluates pushed predicates itself, exactly, per row
-    * ([[DocStore.evalFilter]]) in two cases: (1) `_pos` projected —
-    * parquet RECORD-level filtering must not drop rows before they're
-    * counted (row-group-granular stats/dictionary pruning stays on;
-    * whole-group skips can't disturb the counter: each split counts
-    * from its own first-row index); (2) schema evolution left this
-    * file unable to evaluate a filter page-side (missing column reads
-    * null → SQL three-valued semantics; widened column compares as
-    * the table type). */
-  // …and (3) a deletion vector attached: positions must count every
-  // physical row, exactly like a projected `_pos`
-  private val selfFilter = pushed.nonEmpty &&
-    (needPos || part.dvFile.isDefined || !filtersExactHere)
+  /** Where the pushed predicates are exact for this file, parquet
+    * applies them at every level down to the record, and row positions
+    * (`_pos`, deletion vectors) come from its row index, which counts
+    * the rows its filters skip. The reader evaluates pushed predicates
+    * itself, per row ([[DocStore.evalFilter]]), only where schema
+    * evolution left this file unable to evaluate a filter page-side
+    * (missing column reads null → SQL three-valued semantics; widened
+    * or renamed column compares as the table type); parquet then gets
+    * no predicate at all. */
+  private val selfFilter = pushed.nonEmpty && !filtersExactHere
 
   private val reader: ParquetReader[Group] = {
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projSchema.toString)
-    if (selfFilter)
-      conf.setBoolean("parquet.filter.record-level.enabled", false)
-    val b = ParquetReader
-      .builder(new GroupReadSupport(), new Path(part.file))
-      .withConf(conf)
-      .withFileRange(part.start, part.start + part.length)
+    val b = new ParquetReader.Builder[Group](
+        HadoopInputFile.fromPath(new Path(part.file), DocStore.hadoopConf)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport {
+          override def init(ctx: InitContext): ReadSupport.ReadContext =
+            new ReadSupport.ReadContext(projSchema)
+        }
+    }.withFileRange(part.start, part.start + part.length)
     (if (filtersExactHere) DocStore.toPredicate(pushed, fileSchema) else None) match {
       case Some(p) => b.withFilter(FilterCompat.get(p)).build()
       case None => b.build()
@@ -1277,14 +1267,19 @@ class DocStoreReader(
     }
 
   private var current: Group = _
+  private var pos: Long = -1L
 
   override def next(): Boolean = {
-    current = reader.read()
-    rowIdx += 1
-    while (current != null &&
-      ((selfFilter && !passes(current)) || !dvKeep(rowIdx))) {
+    var skip = true
+    while (skip) {
       current = reader.read()
-      rowIdx += 1
+      skip = current != null && {
+        if (needPos || part.dvFile.isDefined) {
+          pos = reader.getCurrentRowIndex // file-global
+          require(pos >= 0L, s"docstore: parquet gives no row index for ${part.file}")
+        }
+        (selfFilter && !passes(current)) || !dvKeep(pos)
+      }
     }
     current != null
   }
@@ -1296,7 +1291,7 @@ class DocStoreReader(
       val j = projPos(k)
       row.update(k,
         if (metaKind(k) == 1) filePathStr
-        else if (metaKind(k) == 2) rowIdx
+        else if (metaKind(k) == 2) pos
         else if (metaKind(k) == 3) changeTypeStr
         else if (metaKind(k) == 4) commitVer
         else if (j < 0) consts(k)
@@ -1437,14 +1432,10 @@ class DocStoreMicroBatchStream(
     requireAppendOnly(endFiles, live.map(_._1).toSet)
     val parts = ArrayBuffer.empty[InputPartition]
     live.foreach { case (f, pv) =>
-      if (endSet(f) && !seen(f)) {
-        var firstRow = 0L
+      if (endSet(f) && !seen(f))
         DocStore.footerBlocks(f).foreach { b =>
-          parts += DocStorePartition(f, b.getStartingPos, b.getCompressedSize,
-            pv, firstRowIndex = firstRow)
-          firstRow += b.getRowCount
+          parts += DocStorePartition(f, b.getStartingPos, b.getCompressedSize, pv)
         }
-      }
     }
     parts.toArray
   }
@@ -1737,12 +1728,10 @@ class DocStoreSnapshotMicroBatchStream(
             (dvAtV.get(rel).map(abs), dvAtPrev.get(rel).map(abs), true)
           case _ => (dvAtPrev.get(rel).map(abs), None, false)
         }
-        var firstRow = 0L
         DocStore.footerBlocks(f).foreach { b =>
           parts += DocStorePartition(f, b.getStartingPos, b.getCompressedSize,
-            pv, firstRowIndex = firstRow, changeType = tag, commitVersion = v,
+            pv, changeType = tag, commitVersion = v,
             dvFile = dvF, dvPrevFile = dvP, dvEmitDeleted = emitDel)
-          firstRow += b.getRowCount
         }
       }
     }
@@ -2988,13 +2977,17 @@ object DocStore {
     * helper. Constructing a Configuration is NOT free — each instance
     * re-parses the default XML resources on first property access —
     * and the helpers here run per metadata scan, sometimes per FILE
-    * (relOf, dvCardinality), so the per-call `DocStore.hadoopConf`
-    * pattern was measurable planner overhead on every connector
-    * query. Mutating call sites (the parquet reader's projection
-    * schema) copy it (`new Configuration(hadoopConf)`) instead of
-    * sharing it; everything else only resolves filesystems, which is
-    * read-only. Resources are force-loaded once at init so even the
-    * first user pays no parse. */
+    * (relOf, dvCardinality), and the split reader per row group. Only
+    * code that never builds a Configuration of its own pays no parse:
+    * parquet's Path-based `ParquetReader.builder` and the one-argument
+    * `ParquetFileReader.open` each build a fresh one, so the split
+    * reader opens files through `HadoopInputFile` over this conf and
+    * passes its projection through the read support, and footer reads
+    * pass read options built from this conf. Nothing may `set` a key
+    * here; the file writer, whose parquet write support stores its
+    * schema in the conf it is given, copies it
+    * (`new Configuration(hadoopConf)`). Resources are
+    * force-loaded once at init, so a user of this conf pays no parse. */
   val hadoopConf: Configuration = {
     val c = new Configuration()
     c.get("fs.defaultFS"): Unit
@@ -5160,6 +5153,9 @@ object DocStore {
   @volatile var footerLogEnabled = false
   val footerConsultLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
+  private lazy val footerReadOptions =
+    HadoopReadOptions.builder(DocStore.hadoopConf).build()
+
   private def footerOf(file: String): (MessageType, Seq[BlockMetaData]) = {
     footerConsults.incrementAndGet()
     if (footerLogEnabled) footerConsultLog.add(file): Unit
@@ -5169,8 +5165,10 @@ object DocStore {
     val key = s"$file:${st.getLen}:${st.getModificationTime}"
     if (footerCache.size() > 8192) footerCache.clear()
     footerCache.computeIfAbsent(key, _ => {
+      // explicit options: the one-argument open builds its defaults
+      // from a fresh Configuration, parsing Hadoop's XML on every miss
       val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(p, DocStore.hadoopConf))
+        HadoopInputFile.fromPath(p, DocStore.hadoopConf), footerReadOptions)
       try {
         val f = r.getFooter
         (f.getFileMetaData.getSchema, f.getBlocks.asScala.toSeq)
@@ -5747,8 +5745,7 @@ object DocStore {
       case GreaterThanOrEqual(c, v) => Some(mk(prim(c), v, "gtEq"))
       case LessThan(c, v) => Some(mk(prim(c), v, "lt"))
       case LessThanOrEqual(c, v) => Some(mk(prim(c), v, "ltEq"))
-      case In(c, vs) =>
-        Some(vs.map(v => mk(prim(c), v, "eq")).reduce(FilterApi.or))
+      case In(c, vs) => Some(inPred(prim(c), vs))
       case IsNull(c) => Some(nullPred(prim(c), isNull = true))
       case IsNotNull(c) => Some(nullPred(prim(c), isNull = false))
       case And(l, r) =>
@@ -5784,6 +5781,40 @@ object DocStore {
         else FilterApi.notEq(FilterApi.binaryColumn(n), null.asInstanceOf[Binary])
       case other =>
         throw new IllegalArgumentException(s"docstore: null check on $other")
+    }
+  }
+
+  /** `c IN (vs)` as one parquet `In` node, not an OR tree of `eq`s:
+    * every filter level (statistics, dictionary, bloom, column index,
+    * record) evaluates it as one node, the record level with one hash
+    * lookup per row. Literals convert to the column's physical domain
+    * as in [[mk]]. A MILLIS timestamp column keeps the OR of [[mk]]
+    * equalities, which maps a sub-millisecond literal to the empty
+    * set. */
+  private def inPred(p: PrimitiveType, vs: Array[Any]): FilterPredicate = {
+    val n = p.getName
+    def set[T](xs: Array[T]): java.util.Set[T] = new java.util.HashSet[T](xs.toSeq.asJava)
+    p.getPrimitiveTypeName match {
+      case PrimitiveTypeName.BOOLEAN =>
+        FilterApi.in(FilterApi.booleanColumn(n),
+          set(vs.map(v => java.lang.Boolean.valueOf(v.asInstanceOf[Boolean]))))
+      case PrimitiveTypeName.INT32 =>
+        FilterApi.in(FilterApi.intColumn(n), set(vs.map(int32Value(p, _))))
+      case PrimitiveTypeName.INT64 => p.getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.MILLIS =>
+          vs.map(mk(p, _, "eq")).reduce(FilterApi.or)
+        case _ => FilterApi.in(FilterApi.longColumn(n), set(vs.map(int64Value(p, _))))
+      }
+      case PrimitiveTypeName.FLOAT =>
+        FilterApi.in(FilterApi.floatColumn(n),
+          set(vs.map(v => java.lang.Float.valueOf(v.asInstanceOf[Number].floatValue()))))
+      case PrimitiveTypeName.DOUBLE =>
+        FilterApi.in(FilterApi.doubleColumn(n),
+          set(vs.map(v => java.lang.Double.valueOf(v.asInstanceOf[Number].doubleValue()))))
+      case PrimitiveTypeName.BINARY =>
+        FilterApi.in(FilterApi.binaryColumn(n), set(vs.map(v => Binary.fromString(v.toString))))
+      case other =>
+        throw new IllegalArgumentException(s"docstore: IN on $other")
     }
   }
 

@@ -113,6 +113,52 @@ class DocStoreSpec extends SparkSpec {
     assert(scan.readSchema().fieldNames.toSet == Set("lang", "n_chars"))
   }
 
+  test("IN pushes as one parquet In node on every flat type; answers exact") {
+    import spark.implicits._
+    import org.apache.parquet.filter2.predicate.Operators
+    val dir = tmpDir("docstore_in_types")
+    (0 until 40).map(i => (i.toLong, i, i * 0.5, i % 2 == 0, s"s$i",
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i.toLong)),
+        new java.sql.Timestamp(i * 1000L)))
+      .toDF("l", "i", "d", "b", "s", "dt", "ts").coalesce(1)
+      .write.format("docstore").option("path", dir).mode("overwrite").save()
+    // a MILLIS-unit store: an IN there keeps the op-aware rounding
+    val msDir = tmpDir("docstore_in_millis")
+    val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    try (0L until 4L).map(ms => (ms, new java.sql.Timestamp(ms)))
+      .toDF("l", "ts").write.mode("overwrite").parquet(msDir)
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
+      case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    }
+    def check(store: String, c: String, vs: Seq[Any], expect: Set[Long],
+        oneNode: Boolean = true): Unit = {
+      val df = spark.read.format("docstore").option("path", store).load()
+        .filter(col(c).isin(vs: _*)).select("l")
+      val in = docStoreScanOf(df).pushed.filter { case In(`c`, _) => true; case _ => false }
+      assert(in.length == 1, s"IN on $c not pushed: ${docStoreScanOf(df).pushed.mkString(", ")}")
+      val pred = DocStore.toPredicate(in, DocStore.fileSchema(DocStore.listFiles(store).head))
+      assert(pred.exists(_.isInstanceOf[Operators.In[_]]) == oneNode, s"IN on $c became $pred")
+      assert(physical(df).collect { case f: FilterExec => f }.isEmpty, s"residual filter on $c")
+      assert(df.as[Long].collect().toSet == expect, s"IN on $c")
+    }
+    check(dir, "l", Seq(3L, 7L, 99L), Set(3L, 7L))
+    check(dir, "i", Seq(5, 6, -1), Set(5L, 6L))
+    check(dir, "d", Seq(1.5, 2.0, 0.25), Set(3L, 4L))
+    check(dir, "b", Seq(true, false), (0L until 40L).toSet)
+    check(dir, "s", Seq("s1", "s10", "zz"), Set(1L, 10L))
+    check(dir, "dt", Seq(java.sql.Date.valueOf("1970-01-03"), java.sql.Date.valueOf("1970-01-05")),
+      Set(2L, 4L))
+    check(dir, "ts", Seq(new java.sql.Timestamp(3000L), new java.sql.Timestamp(8000L)),
+      Set(3L, 8L))
+    // wide enough for Spark's InSet: still one pushed IN, one parquet node
+    check(dir, "l", (20L until 60L), (20L until 40L).toSet)
+    // MILLIS: a sub-millisecond literal matches nothing, an aligned one its row
+    def at(nanos: Int) = { val t = new java.sql.Timestamp(0L); t.setNanos(nanos); t }
+    check(msDir, "ts", Seq(at(500000), at(2000000)), Set(2L), oneNode = false)
+  }
+
   test("unsupported predicates stay residual — never pushed approximately") {
     val df = new DocStoreTableSource(sfDir).read(spark, "documents")
       .filter(col("text").startsWith("a") && col("doc_id") >= 5)
@@ -1863,5 +1909,61 @@ class DocStoreSpec extends SparkSpec {
     assert(!sites.exists(_.contains("DataFrameReader.parquet")),
       s"a compaction job came from a parquet read:\n${sites.mkString("\n---\n")}")
     assert(spark.table("cp_jobs.db.t").count() == expected.size)
+  }
+
+  // ---- row positions under parquet's page skipping ----
+
+  /** A merge-on-read table holding keys 0 until 60,000 in order in one
+    * file, so every row's file position equals its key. Parquet cuts a
+    * page at 20,000 rows, so a row group of all 60,000 keys spans 3
+    * pages, and its column index lets a point filter skip 2 of them.
+    * Deletes key 45,000 and checks that exactly that row goes, and
+    * that `_pos` and the deletion vector agree with the key under
+    * pushed filters. */
+  private def checkPositionsUnderPageSkips(cat: String,
+      rowGroupBytes: Option[String]): Seq[Int] = {
+    import spark.implicits._
+    val root = tmpDir(s"docstore_$cat")
+    ensureCat(cat, root)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    spark.sql(s"""CREATE TABLE $cat.db.t (k BIGINT, v STRING)
+      USING docstore TBLPROPERTIES ('rowlevel'='mor')""")
+    val w = (0L until 60000L).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1)
+      .writeTo(s"$cat.db.t")
+    rowGroupBytes.fold(w)(b => w.option("rowGroupBytes", b)).append()
+    val path = s"$root/db/t"
+    val files = DocStore.listFiles(path)
+    assert(files.size == 1, s"expected one file: $files")
+    val pagesPerGroup = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(files.head), DocStore.hadoopConf))
+      try DocStore.footerBlocks(files.head).map(b =>
+        r.readOffsetIndex(b.getColumns.get(0)).getPageCount)
+      finally r.close()
+    }
+    def load() = spark.read.format("docstore").option("path", path).load()
+    assert(load().filter(col("_pos") =!= col("k")).count() == 0L)
+    assert(load().filter(col("k") === 50000L).select("_pos").as[Long].collect().toSeq ==
+      Seq(50000L), "_pos of a row read under a pushed point filter")
+    spark.sql(s"DELETE FROM $cat.db.t WHERE k = 45000")
+    assert(DocStore.dvMap(path, None).size == 1, "the delete should write a deletion vector")
+    val left = spark.table(s"$cat.db.t").select("k").as[Long].collect().toSet
+    assert(!left(45000L), "the deleted key still reads")
+    assert(left == (0L until 60000L).toSet - 45000L,
+      s"the delete removed other keys: ${((0L until 60000L).toSet -- left).toSeq.sorted.take(5)}")
+    assert(load().filter(col("k") >= 40000L).select("k").as[Long].collect().toSet ==
+      (40000L until 60000L).toSet - 45000L, "the deletion vector under a pushed range filter")
+    pagesPerGroup
+  }
+
+  test("MoR DELETE marks the row it matched when parquet skips pages of one row group") {
+    val pages = checkPositionsUnderPageSkips("pos_pages", None)
+    assert(pages == Seq(3), s"expected one 3-page row group, got pages per group $pages")
+  }
+
+  test("MoR DELETE marks the row it matched across many small row groups") {
+    val pages = checkPositionsUnderPageSkips("pos_groups", Some("65536"))
+    assert(pages.length >= 10, s"expected many row groups, got pages per group $pages")
   }
 }
