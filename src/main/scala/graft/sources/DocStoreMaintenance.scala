@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, OverwriteByExpression}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftshim.CatalystBridge
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -111,8 +112,7 @@ object DocStoreMaintenance {
         "DATA columns in the store — directory-encoded and page-encoded " +
         "values would be ambiguous; partition columns must be new " +
         "(stripped into the path by the sink)")
-    DocStore.commitSnapshotWithDvs(path, op = "partspec",
-      partSpec = Some(cols))((e, d) => (e, d))
+    DocStore.commitSnapshot(path, op = "partspec", partSpec = Some(cols))(identity)
   }
 
   /** Create branch `name` pointing at `fromVersion` (default: the
@@ -174,22 +174,23 @@ object DocStoreMaintenance {
   }
 
   /** Bin-pack the small files of every partition into one clustered
-    * file per partition. The candidate files are read through the
-    * connector's own scan, pinned to the snapshot version whose
-    * listing and deletion vectors chose them: the store supplies the
-    * schema (no inference job), renamed and dropped columns resolve
-    * through the table's column IDs as a catalog read does, and the
-    * reader skips each file's deletion-vector positions split by
-    * split. The clustered docstore sink then writes exactly one file
-    * per partition: a shuffle plus the write, two jobs at most. The
-    * commit publishes the replacements and retires the inputs — as a
-    * single atomic manifest swap on a snapshot store (readers see old
-    * or new, never a mix; the pre-compaction version stays
-    * time-travelable until vacuum), or publish-before-retire on a
-    * plain store (the same transient-duplication-not-loss window as
-    * the copy-on-write commit). A concurrent commit that retired an
-    * input or moved its deletion vector since the pinned version
-    * aborts the swap.
+    * file per partition, through the store's own read and write. The
+    * candidate files form a table restricted to them (`onlyFiles`) and
+    * pinned to the snapshot version whose listing and deletion vectors
+    * chose them. Its scan reads them: the store supplies the schema,
+    * renamed and dropped columns resolve through the table's column
+    * IDs as a catalog read does, and the reader skips each file's
+    * deletion-vector positions. The rewrite goes back to that same
+    * table as an overwrite (`OverwriteByExpression` with `true`), which
+    * the store's batch write commits as "replace exactly these files":
+    * a shuffle plus the write, two jobs at most. On a snapshot store
+    * that is one atomic manifest swap, op `compact` (the
+    * pre-compaction version stays time-travelable until vacuum); on a
+    * plain store it publishes before it retires. The commit's rule for
+    * every file a write retires applies: each input must still be live
+    * and bound to the deletion vector it was read through, else the
+    * swap aborts and the published rewrite is swept. The stats come
+    * from the write's commit (its driver metrics), not a re-listing.
     *
     * Only partitions holding ≥2 files under `smallerThan` bytes (or a
     * qualifying deletion vector) are touched; everything else keeps
@@ -197,7 +198,7 @@ object DocStoreMaintenance {
     * directory text (strings, not the table's declared types), so
     * values like "00123" and the Hive default partition round-trip
     * exactly; a partition column of another layout (an evolved spec)
-    * is not written into the rewrite.
+    * is left out of the table, so the rewrite never writes it.
     *
     * The table loads as a catalog read loads it: a snapshot store's
     * schema comes from its manifest, but a plain store opens the
@@ -211,9 +212,8 @@ object DocStoreMaintenance {
       sortBy: Seq[String] = Nil,
       rowGroupBytes: Option[Long] = None,
       dvFraction: Double = 0.0): CompactStats = {
-    val conf = DocStore.hadoopConf
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(DocStore.hadoopConf)
     // one version for the listing, the deletion vectors, the read and
     // the commit's conflict check
     val readVersion =
@@ -265,98 +265,44 @@ object DocStoreMaintenance {
         "different partition layouts (partition evolution); compact " +
         "one layout at a time")
 
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val stagingStore = s"$path/_compact-$token"
+    val inputs = bins.flatMap(_._2.map(_._1))
     val table = DocStoreCatalog.loadStore(root)
-    // the table's data columns plus the bins' own partition keys: a
-    // partition column of another layout (a spec evolved y -> y,m)
-    // reads null here and would otherwise land in the rewrite as a
-    // physical data column
+    // the table's data columns plus the bins' own partition keys, read
+    // as directory text: a partition column of another layout (a spec
+    // evolved y -> y,m) would read null here and otherwise land in the
+    // rewrite as a physical data column
     val otherPartCols =
       (DocStore.partColsOf(listing) ++ table.tablePartitionBy).toSet -- partKeys
-    val read = CatalystBridge.ofRows(spark, DataSourceV2Relation.create(
-      table.copy(
-        tableSchema = StructType(table.tableSchema.map(f =>
-          if (partKeys.contains(f.name)) f.copy(dataType = StringType) else f)),
-        versionAsOf = readVersion,
-        onlyFiles = Some(bins.flatMap(_._2.map(_._1)).toSet)),
-      None, None, CaseInsensitiveStringMap.empty()))
-    val all0 = read.drop(otherPartCols.toSeq: _*)
+    val binTable = table.copy(
+      tableSchema = StructType(table.tableSchema.filterNot(f => otherPartCols(f.name))
+        .map(f => if (partKeys.contains(f.name)) f.copy(dataType = StringType) else f)),
+      versionAsOf = readVersion,
+      onlyFiles = Some(inputs.toSet))
+    def relation() = DataSourceV2Relation.create(binTable, None, None,
+      CaseInsensitiveStringMap.empty())
+    val read = CatalystBridge.ofRows(spark, relation())
     // an UNPARTITIONED store has no cluster keys to route one file per
     // partition — bin-pack by sizing the shuffle to the input bytes
-    // (⌈total/smallerThan⌉ output files), else the staged write keeps
-    // the upstream task layout and "compaction" re-emits N files
-    val all =
-      if (partKeys.nonEmpty) all0
+    // (⌈total/smallerThan⌉ output files), else the write keeps the
+    // upstream task layout and "compaction" re-emits N files
+    val rows =
+      if (partKeys.nonEmpty) read
       else {
-        val totalBytes = bins.flatMap(_._2)
-          .map(f => fs.getFileStatus(new Path(f._1)).getLen).sum
-        all0.repartition(math.max(1L,
+        val totalBytes = inputs.map(f => fs.getFileStatus(new Path(f)).getLen).sum
+        read.repartition(math.max(1L,
           (totalBytes + smallerThan - 1) / smallerThan).toInt)
       }
-    DocStore.writeStaged(all, stagingStore, partKeys,
-      DocStore.bloomColumns(path, CaseInsensitiveStringMap.empty(), all.schema, partKeys),
-      sortBy, rowGroupBytes)
-
-    // publish: staged rel → store rel under a compaction-unique name
-    // (visible-NAMED but, on a snapshot store, invisible until the
-    // manifest swap — the staging rename order doesn't matter there)
-    val staged = DocStore.listFilesWithPartitions(stagingStore)
-    val moved = staged.map { case (f, _) =>
-      val rel = DocStore.relOf(stagingStore, f)
-      val dir = rel.split("/").dropRight(1)
-      val dstRel = (dir :+ s"compact-$token-${rel.split("/").last}").mkString("/")
-      val dst = new Path(root, dstRel)
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(new Path(f), dst),
-        s"docstore: compaction publish rename failed for $rel")
-      dstRel
+    val written = CatalystBridge.ofRows(spark, OverwriteByExpression.byName(
+      relation(), CatalystBridge.analyzed(rows), Literal.TrueLiteral,
+      (Seq("sortBy" -> sortBy.mkString(",")).filter(_._2.nonEmpty) ++
+        rowGroupBytes.map(n => "rowGroupBytes" -> n.toString)).toMap))
+    val committed = written.queryExecution.commandExecuted match {
+      case c: CommandResult => c.commandPhysicalPlan.metrics
+      case other => throw new IllegalStateException(
+        s"docstore: compaction of $path ran no write command: ${other.nodeName}")
     }
-    val retiredAbs = bins.flatMap(_._2.map(_._1))
-    val retired = retiredAbs.map(DocStore.relOf(path, _)).toSet
-    val version =
-      if (DocStore.snapshotEnabled(path))
-        try Some(DocStore.commitSnapshotWithDvs(path, op = "compact") { (base, dvsNow) =>
-          // the compacted files' rows came FROM the retired inputs; a
-          // concurrent commit retiring any of them (DELETE/MERGE/other
-          // compactor) makes this rewrite stale — abort, like the
-          // copy-on-write commit's write-write conflict check. The same
-          // goes for a retired file whose DELETION VECTOR moved since
-          // we applied it: the rewrite would resurrect the concurrent
-          // operation's deleted rows.
-          val gone = retired.filterNot(base.toSet)
-          if (gone.nonEmpty)
-            throw new IllegalStateException(
-              s"docstore: compaction conflict at $path — a concurrent " +
-                s"commit already retired ${gone.take(3).mkString(", ")}; " +
-                "re-run compaction against the current snapshot")
-          val dvMoved = retired.filter(rel => dvsNow.get(rel) != dvs.get(rel))
-          if (dvMoved.nonEmpty)
-            throw new IllegalStateException(
-              s"docstore: compaction conflict at $path — a concurrent " +
-                "row-level operation changed the deletion vector of " +
-                s"${dvMoved.take(3).mkString(", ")}; re-run compaction " +
-                "against the current snapshot")
-          // retired files' DV bindings are pruned by the commit core
-          (base.filterNot(retired) ++ moved, dvsNow)
-        })
-        catch {
-          case e: IllegalStateException =>
-            // aborted swap: the moved files were never referenced by
-            // any manifest (invisible to readers) — sweep them so the
-            // failed attempt leaves no litter for vacuum to explain
-            moved.foreach(rel => fs.delete(new Path(root, rel), false))
-            fs.delete(new Path(stagingStore), true)
-            throw e
-        }
-      else {
-        // plain store: publish happened above; retire last so a crash
-        // duplicates transiently instead of losing rows
-        retiredAbs.foreach(f => fs.delete(new Path(f), false))
-        None
-      }
-    fs.delete(new Path(stagingStore), true)
-    CompactStats(bins.size, retired.size, moved.size, version)
+    CompactStats(bins.size, inputs.size, committed("filesAdded").value.toInt,
+      Some(committed("committedVersion").value).filter(_ > 0))
   }
 
   /** Reclaim a snapshot store's disk: keep the newest `keepVersions`
@@ -408,11 +354,12 @@ object DocStoreMaintenance {
 
   /** GC for failed-commit litter WITHOUT expiring any version: deletes
     * physical data files referenced by NO committed manifest (a died
-    * mid-commit writer's renamed-in files, an aborted compaction's
-    * leftovers) plus crashed writes' `_staging-*`/`_compact-*` dirs —
-    * each only once older than `graceMs`, so in-flight commits are
-    * never touched. Time travel keeps working for every retained
-    * version; run this beside writers as routinely as ingestion. */
+    * mid-commit writer's renamed-in files, compaction included, since
+    * it commits through the same batch write) plus crashed writes'
+    * `_staging-*` dirs — each only once older than `graceMs`, so
+    * in-flight commits are never touched. Time travel keeps working
+    * for every retained version; run this beside writers as routinely
+    * as ingestion. */
   def orphanSweep(path: String, graceMs: Long = 10L * 60 * 1000): Int = {
     require(DocStore.snapshotEnabled(path),
       s"docstore: orphanSweep needs a snapshot store ($path has no ${DocStore.SnapshotDir}/)")
@@ -433,8 +380,7 @@ object DocStoreMaintenance {
     val cutoff = System.currentTimeMillis() - graceMs
     val stale = fs.listStatus(root).toSeq.filter { s =>
       val nme = s.getPath.getName
-      s.isDirectory && (nme.startsWith("_staging-") || nme.startsWith("_compact-")) &&
-        s.getModificationTime < cutoff
+      s.isDirectory && nme.startsWith("_staging-") && s.getModificationTime < cutoff
     }
     stale.foreach(s => fs.delete(s.getPath, true))
     n + stale.size

@@ -15,13 +15,14 @@ import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.{Group, GroupWriter}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.io.api.Binary
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types => PTypes}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, ListLogicalTypeAnnotation, MapLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -32,6 +33,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -252,7 +254,8 @@ case class DocStoreTable(path: String, tableSchema: StructType,
         .orElse(versionAsOf),
       renamedFrom, onlyFiles)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new DocStoreWriteBuilder(path, info, tablePartitionBy, tableSchema)
+    new DocStoreWriteBuilder(path, info, tablePartitionBy, tableSchema,
+      onlyFiles, versionAsOf)
 
   /** The store's effective partition routing: catalog-declared keys
     * when present, else whatever the directory layout carries. */
@@ -615,8 +618,9 @@ case class DocStoreScan(
   // guarantees only hold while every file shares the SAME key list
   @transient private lazy val uniformLayout: Boolean =
     listing.forall(_._2.map(_._1) == partColsOrdered)
-  // deletion-vector bindings at the read version (merge-on-read)
-  @transient private lazy val dvByRel: Map[String, String] =
+  // deletion-vector bindings at the read version (merge-on-read) — a
+  // copy-on-write commit checks the files it retires against them
+  @transient lazy val dvByRel: Map[String, String] =
     DocStore.dvMap(path, versionAsOf)
   // manifest-embedded per-file statistics at the read version:
   // data-filter file skipping answers from these WITHOUT opening the
@@ -1998,7 +2002,10 @@ class DocStoreAggReader(part: DocStoreAggPartition, specs: Seq[DocStore.AggSpec]
 
 /** Builds the batch write. `truncate()` (mode("overwrite")) defers the
   * delete to job COMMIT: a failed overwrite leaves the store's old
-  * contents fully intact.
+  * contents fully intact. On a table restricted to `onlyFiles` (read
+  * at `versionAsOf`), a truncate replaces exactly those files and
+  * routes the rewrite by their own partition layout — compaction's
+  * commit.
   *
   * [[RequiresDistributionAndOrdering]] — the 100 TB small-files
   * defense (reference A12's file rotation, main.py:225-228, exists to
@@ -2021,7 +2028,9 @@ class DocStoreAggReader(part: DocStoreAggPartition, specs: Seq[DocStore.AggSpec]
   * keeps the upstream layout and writes at full parallelism. */
 class DocStoreWriteBuilder(path: String, info: LogicalWriteInfo,
     tablePartitionBy: Seq[String] = Nil,
-    tableSchema: StructType = new StructType())
+    tableSchema: StructType = new StructType(),
+    onlyFiles: Option[Set[String]] = None,
+    versionAsOf: Option[Long] = None)
     extends WriteBuilder with SupportsTruncate {
 
   private var truncateFirst = false
@@ -2029,14 +2038,20 @@ class DocStoreWriteBuilder(path: String, info: LogicalWriteInfo,
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
 
   override def build(): Write = new Write with RequiresDistributionAndOrdering {
-    // per-write option first; then the store's CURRENT `#partspec`
-    // (partition evolution — the manifest is the source of truth for
-    // where NEW files route); the catalog-declared table partitioning
-    // (CREATE TABLE … PARTITIONED BY) is the default
+    private val replaced = onlyFiles.filter(_ => truncateFirst)
+    // per-write option first; a rewrite of restricted files keeps
+    // their layout; then the store's CURRENT `#partspec` (partition
+    // evolution — the manifest is the source of truth for where NEW
+    // files route); the catalog-declared table partitioning (CREATE
+    // TABLE … PARTITIONED BY) is the default
     private val partitionBy = {
       val opt = DocStore.partitionByOf(info.options())
       if (opt.nonEmpty) opt
-      else DocStore.currentPartSpec(path).getOrElse(tablePartitionBy)
+      else replaced match {
+        case Some(fs) =>
+          DocStore.partColsOf(DocStore.listFilesWithPartitions(path, versionAsOf, Some(fs)))
+        case None => DocStore.currentPartSpec(path).getOrElse(tablePartitionBy)
+      }
     }
     private val sortBy = DocStore.sortByOf(info.options())
     private val qSchema = info.schema()
@@ -2104,13 +2119,23 @@ class DocStoreWriteBuilder(path: String, info: LogicalWriteInfo,
         Expressions.sort(Expressions.column(qSchema.fields(i).name),
           SortDirection.ASCENDING)).toArray
 
-    override def toBatch: BatchWrite =
+    private lazy val batch =
       DocStoreBatchWrite(path, writeSchema, partCols,
         info.queryId(), truncateFirst,
         DocStore.rowGroupBytesOf(info.options()),
+        replaceFiles = replaced.map(fs => () => fs.toSeq),
         snapshots = info.options().getBoolean("snapshots", false),
         bloomFor = bloomFor,
-        branchTo = Option(info.options().get("branch")).map(_.trim))
+        branchTo = Option(info.options().get("branch")).map(_.trim),
+        replacedDvs = () => DocStore.dvMap(path, versionAsOf))
+
+    override def toBatch: BatchWrite = batch
+
+    override def supportedCustomMetrics(): Array[CustomMetric] =
+      Array(new DocStoreFilesAdded, new DocStoreCommittedVersion)
+
+    override def reportDriverMetrics(): Array[CustomTaskMetric] =
+      batch.committedMetrics
 
     /** Streaming sink: per-EPOCH staged commits with an idempotence
       * marker, so a micro-batch whose commit outcome was unknown at a
@@ -2202,10 +2227,7 @@ case class DocStoreStreamingWrite(
       // the reverse order could mark an epoch done whose files never
       // entered the manifest (silent row loss).
       if (snapshots || DocStore.snapshotEnabled(path))
-        DocStore.commitSnapshot(path, ndvHints = messages.toSeq.flatMap {
-          case m: DocStoreCommitMessage => m.ndv
-          case _ => Nil
-        }.map { case (rel, cols) => rel -> cols.toMap }.toMap)(_ ++ rels): Unit
+        DocStore.commitSnapshot(path)(_ ++ rels): Unit
       val out = fs.create(marker(epochId), true)
       out.close()
     }
@@ -2377,15 +2399,8 @@ case class DocStoreUpsertStreamingWrite(
     val pub = pubStore(epochId)
     DocStore.writeStaged(inserts, pub, partitionBy, bloomFor,
       rowGroupBytes = rowGroupBytes)
-    val fs = new Path(path).getFileSystem(DocStore.hadoopConf)
-    val newRels = DocStore.listFiles(pub).map { f =>
-      val rel = DocStore.relOf(pub, f)
-      val dst = new Path(path, rel)
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(new Path(f), dst),
-        s"docstore: upsert epoch $epochId publish rename failed for $rel")
-      rel
-    }
+    val newRels = DocStore.listFiles(pub).map(DocStore.relOf(pub, _))
+    DocStore.publish(path, pub, newRels)
     DocStore.commitRowDelta(path, newRels, frags, baselineDv): Unit
   }
 
@@ -2462,7 +2477,9 @@ class DocStoreRowLevelOperation(
               Option(opScan).map(_.currentFiles).getOrElse(Nil)),
             expectOpColumn = true,
             bloomFor = DocStore.bloomColumns(path, info.options(),
-              info.schema(), partitionBy))
+              info.schema(), partitionBy),
+            replacedDvs = () =>
+              Option(opScan).map(_.dvByRel).getOrElse(Map.empty))
         override def description(): String =
           s"DocStoreCopyOnWrite($cmd, path=$path)"
       }
@@ -2586,10 +2603,6 @@ class DocStoreDeltaBatchWrite(
     DocStoreDeltaWriterFactory(path, staging, rowSchema, partitionBy, bloomFor)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = DocStore.hadoopConf
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
     val newRels = messages.toSeq.flatMap {
       case DocStoreDeltaCommitMessage(rels, _) => rels
       case _ => Nil
@@ -2602,15 +2615,10 @@ class DocStoreDeltaBatchWrite(
     }.groupBy(_.dataRel).map { case (rel, fr) =>
       rel -> fr.map(f => (s"$staging/${f.fragRel}", f.count))
     }
-    val stagingPath = new Path(staging)
-    newRels.foreach { rel =>
-      val dst = new Path(root, rel)
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(new Path(stagingPath, rel), dst),
-        s"docstore: merge-on-read commit rename failed for $rel")
-    }
+    DocStore.publish(path, staging, newRels)
     DocStore.commitRowDelta(path, newRels, frags, baselineDv): Unit
-    fs.delete(stagingPath, true): Unit
+    val stagingPath = new Path(staging)
+    stagingPath.getFileSystem(DocStore.hadoopConf).delete(stagingPath, true): Unit
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -2704,14 +2712,16 @@ class DocStoreDeltaWriter(
   override def close(): Unit = if (wroteInserts) inserts.close()
 }
 
-/** Driver-side commit protocol. Tasks write only under
-  * `<path>/_staging-<queryId>` (underscore-prefixed → invisible to
-  * every reader's listing); commit atomically-enough publishes by
-  * renaming staged files into the store (one rename per file, no data
-  * copy on any sane filesystem), deleting pre-existing data first when
-  * truncating. Abort deletes the staging tree and the store is
-  * untouched. Concurrent writers stage under different queryIds and
-  * never collide. */
+/** Driver-side commit protocol of every batch write: appends,
+  * overwrites, copy-on-write row-level operations and compaction.
+  * Tasks write only under `<path>/_staging-<queryId>` (underscore-
+  * prefixed → invisible to every reader's listing); commit publishes
+  * by renaming staged files into the store, then retires every file
+  * (a truncate) or exactly `replaceFiles` — a copy-on-write scan's
+  * groups, or with `truncateFirst` a restricted table's files
+  * (compaction, op `compact`). Abort deletes the staging tree and the
+  * store is untouched. Concurrent writers stage under different
+  * queryIds and never collide. */
 case class DocStoreBatchWrite(
     path: String,
     schema: StructType,
@@ -2723,9 +2733,16 @@ case class DocStoreBatchWrite(
     expectOpColumn: Boolean = false,
     snapshots: Boolean = false,
     bloomFor: Seq[String] = Nil,
-    branchTo: Option[String] = None) extends BatchWrite {
+    branchTo: Option[String] = None,
+    // the deletion-vector bindings (data rel → DV rel) the replaced
+    // files' rows were read through
+    replacedDvs: () => Map[String, String] = () => Map.empty) extends BatchWrite {
 
   private def staging = s"$path/_staging-$queryId"
+  // a truncate with no replaced files empties the whole store
+  private def wipes = truncateFirst && replaceFiles.isEmpty
+  // (files added, snapshot version made), once committed
+  @volatile private var committed: Option[(Long, Option[Long])] = None
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     DocStoreWriterFactory(staging, schema, partitionBy, rowGroupBytes,
@@ -2744,7 +2761,7 @@ case class DocStoreBatchWrite(
     val snapMode = snapshots || DocStore.snapshotEnabled(path)
     require(branchTo.isEmpty || snapMode,
       s"docstore: branch writes need a snapshot store — $path is plain")
-    if (truncateFirst && !snapMode) {
+    if (wipes && !snapMode) {
       fs.listStatus(root).foreach { s =>
         val n = s.getPath.getName
         if (!n.startsWith("_") && !n.startsWith(".")) {
@@ -2758,64 +2775,73 @@ case class DocStoreBatchWrite(
       case m: DocStoreCommitMessage => m.relPaths
       case _ => Nil
     }
-    newRels.foreach { rel =>
-      val dst = new Path(root, rel)
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(new Path(stagingPath, rel), dst),
-        s"docstore: commit rename failed for $rel")
-    }
-    if (snapMode) {
-      // ONE manifest swap publishes the new files and retires the
-      // replaced/truncated ones together — readers see the old set or
-      // the new set, never a mix, whatever this commit crashed through
-      // before the swap (staged/renamed files outside the manifest are
-      // invisible).
-      val retired = replaceFiles.toSeq.flatMap(_.apply())
-        .map(DocStore.relOf(path, _)).toSet
-      val op =
-        if (truncateFirst) "overwrite"
-        else if (retired.nonEmpty) "merge" // copy-on-write DELETE/UPDATE/MERGE
-        else "append"
-      val ndvHints = messages.toSeq.flatMap {
-        case m: DocStoreCommitMessage => m.ndv
-        case _ => Nil
-      }.map { case (rel, cols) => rel -> cols.toMap }.toMap
-      DocStore.commitSnapshot(path, op = op, branch = branchTo,
-        ndvHints = ndvHints) { base =>
-        // WRITE-WRITE CONFLICT detection (row-level ops only): this
-        // operation computed its replacement rows FROM the retired
-        // files; if a concurrent commit already retired any of them
-        // (compaction, DELETE, another MERGE), filtering would
-        // silently RESURRECT that commit's outcome — e.g. re-adding
-        // rows a concurrent DELETE dropped. Every table format aborts
-        // here (Iceberg's validation exceptions); so do we. The
-        // optimistic retry inside commitSnapshot re-invokes this
-        // closure against the WINNER's base, so the validation always
-        // sees the serialized truth.
-        val gone = retired.filterNot(base.toSet)
-        if (gone.nonEmpty)
-          throw new IllegalStateException(
-            s"docstore: write-write conflict at $path — a concurrent " +
-              s"commit already retired ${gone.take(3).mkString(", ")}" +
-              (if (gone.size > 3) s" (+${gone.size - 3} more)" else "") +
+    DocStore.publish(path, staging, newRels)
+    val replaced = replaceFiles.toSeq.flatMap(_.apply())
+    val version =
+      if (!snapMode) {
+        // PUBLISH-BEFORE-RETIRE on purpose: a crash inside this window
+        // leaves old AND new files visible — transient DUPLICATION a
+        // retried operation or a cleanup can reconcile — whereas
+        // retire-first would lose every surviving row of the replaced
+        // files on the same crash
+        replaced.foreach(f => DocStore.retireFile(fs, new Path(f)))
+        None
+      } else {
+        // ONE manifest swap publishes the new files and retires the
+        // replaced/truncated ones together — readers see the old set or
+        // the new set, never a mix, whatever this commit crashed through
+        // before the swap (staged/renamed files outside the manifest are
+        // invisible).
+        val retired = replaced.map(DocStore.relOf(path, _)).toSet
+        val readDvs = if (retired.isEmpty) Map.empty[String, String] else replacedDvs()
+        val op =
+          if (wipes) "overwrite"
+          else if (truncateFirst) "compact"
+          else if (retired.nonEmpty) "merge" // copy-on-write DELETE/UPDATE/MERGE
+          else "append"
+        def conflict(what: String, rels: Iterable[String]) =
+          new IllegalStateException(
+            s"docstore: write-write conflict at $path — $what " +
+              rels.take(3).mkString(", ") +
+              (if (rels.size > 3) s" (+${rels.size - 3} more)" else "") +
               "; retry the operation against the current snapshot")
-        (if (truncateFirst) Nil else base.filterNot(retired)) ++ newRels
+        try Some(DocStore.commitSnapshotWithDvs(path, op = op, branch = branchTo) { (base, dvs) =>
+          // WRITE-WRITE CONFLICT detection: this write computed its rows
+          // FROM the retired files, so each must still be live and bound
+          // to the deletion vector it was read through; else a concurrent
+          // commit (compaction, DELETE, another MERGE) would be silently
+          // undone. Every table format aborts here (Iceberg's validation
+          // exceptions). The optimistic retry re-invokes this closure
+          // against the WINNER's base, so it sees the serialized truth.
+          val gone = retired.filterNot(base.toSet)
+          if (gone.nonEmpty) throw conflict("a concurrent commit already retired", gone)
+          val moved = retired.filter(rel => dvs.get(rel) != readDvs.get(rel))
+          if (moved.nonEmpty)
+            throw conflict("a concurrent row-level operation changed the deletion vector of", moved)
+          // retired files' DV bindings are pruned by the commit core
+          ((if (wipes) Nil else base.filterNot(retired)) ++ newRels, dvs)
+        }) catch {
+          case e: IllegalStateException =>
+            // aborted swap: the published files were never referenced
+            // by any manifest (invisible to readers) — sweep them so the
+            // failed attempt leaves no litter for vacuum to explain
+            newRels.foreach(rel => DocStore.retireFile(fs, new Path(root, rel)))
+            fs.delete(stagingPath, true)
+            throw e
+        }
+      }
+    fs.delete(stagingPath, true): Unit
+    committed = Some((newRels.size.toLong, version))
+  }
+
+  /** The outcome as [[DocStoreFilesAdded]] and (snapshot stores)
+    * [[DocStoreCommittedVersion]] driver metrics, once committed. */
+  def committedMetrics: Array[CustomTaskMetric] =
+    committed.toArray.flatMap { case (files, version) =>
+      (("filesAdded" -> files) +: version.map("committedVersion" -> _).toSeq).map {
+        case (n, v) => new CustomTaskMetric { def name(): String = n; def value(): Long = v }
       }
     }
-    // copy-on-write commit (row-level DELETE/UPDATE/MERGE): retire
-    // exactly the group files the paired operation scan read — their
-    // surviving/updated rows are in the replacement files published
-    // just above. PUBLISH-BEFORE-RETIRE ordering on purpose: a crash
-    // inside this window leaves old AND new files visible — transient
-    // DUPLICATION a retried operation or a cleanup can reconcile —
-    // whereas retire-first would lose every surviving row of the
-    // affected groups on the same crash. In snapshot mode the manifest
-    // swap above IS the durable-atomic commit and the old files stay
-    // for time travel — vacuum reclaims them.
-    if (!snapMode) replaceFiles.foreach(_().foreach(f =>
-      DocStore.retireFile(fs, new Path(f))))
-    fs.delete(stagingPath, true): Unit
-  }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val stagingPath = new Path(staging)
@@ -2823,10 +2849,21 @@ case class DocStoreBatchWrite(
   }
 }
 
-/** Staged rels plus each file's writer-measured per-column NDV
-  * estimates — a handful of Longs per file, never a sketch. */
-case class DocStoreCommitMessage(relPaths: Seq[String],
-    ndv: Seq[(String, Seq[(String, Long)])] = Nil) extends WriterCommitMessage
+/** Driver metrics a batch write reports once committed: the data files
+  * it added, and the snapshot version it made. A plain store reports no
+  * version, so that metric keeps its initial 0, which no version takes.
+  * Compaction reads its `CompactStats` from them. */
+class DocStoreFilesAdded extends CustomSumMetric {
+  override def name(): String = "filesAdded"
+  override def description(): String = "data files the commit added"
+}
+class DocStoreCommittedVersion extends CustomSumMetric {
+  override def name(): String = "committedVersion"
+  override def description(): String = "snapshot version the commit made"
+}
+
+/** The files one task staged, relative to the staging root. */
+case class DocStoreCommitMessage(relPaths: Seq[String]) extends WriterCommitMessage
 
 case class DocStoreWriterFactory(
     staging: String,
@@ -2844,7 +2881,10 @@ case class DocStoreWriterFactory(
   * partition value (Hive `k=v` subdirectories under staging), strips
   * partition columns from the written data — they live in the path,
   * exactly like Spark's own sink — and reports its staged files
-  * relative to the staging root so the driver can publish them. */
+  * relative to the staging root so the driver can publish them. Each
+  * file's footer carries its columns' NDV estimates
+  * ([[DocStore.NdvFooterKey]]), so whichever commit publishes the file
+  * records them in its `#stat` line. */
 class DocStoreDataWriter(
     staging: String,
     schema: StructType,
@@ -2865,7 +2905,6 @@ class DocStoreDataWriter(
     // [[DocStore.bloomColumns]] resolved them on the driver
     bloomFor: Seq[String] = Nil) extends DataWriter[InternalRow] {
 
-  private val conf = new Configuration(DocStore.hadoopConf)
   private val partIdx: Seq[(String, Int, DataType)] = partitionBy.map { c =>
     val i = schema.fieldIndex(c)
     (c, i, schema.fields(i).dataType)
@@ -2881,11 +2920,10 @@ class DocStoreDataWriter(
   private val writers = mutable.LinkedHashMap.empty[String, ParquetWriter[Group]]
   private val files = ArrayBuffer.empty[String]
   // per-file, per-data-column NDV sketches (flat columns only) — the
-  // write-time measurement behind the `#stat` lines' ndv field
+  // write-time measurement each file's footer carries
   private val ndvTracked: Array[Boolean] =
     dataFields.map(f => DocStore.ndvTracked(f._2.dataType)).toArray
   private val sketches = mutable.LinkedHashMap.empty[String, Array[DocStore.NdvSketch]]
-  private val relByDir = mutable.Map.empty[String, String]
 
   private def writerFor(relDir: String): ParquetWriter[Group] =
     writers.getOrElseUpdate(relDir, {
@@ -2896,12 +2934,15 @@ class DocStoreDataWriter(
       }
       val rel = (if (relDir.isEmpty) "" else relDir + "/") + name
       files += rel
-      relByDir(relDir) = rel
-      sketches(relDir) = Array.fill(dataFields.length)(new DocStore.NdvSketch)
-      val b = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(new Path(s"$staging/$rel"), conf))
-        .withType(msgType)
-        .withConf(conf)
+      val sk = Array.fill(dataFields.length)(new DocStore.NdvSketch)
+      sketches(relDir) = sk
+      val b = new DocStore.GroupWriterBuilder(
+        HadoopOutputFile.fromPath(new Path(s"$staging/$rel"), DocStore.hadoopConf),
+        msgType,
+        () => dataFields.zipWithIndex.collect {
+          case ((_, f), j) if ndvTracked(j) => f.name -> sk(j).estimate()
+        }.toMap)
+        .withConf(DocStore.hadoopConf)
         // deterministic names must tolerate a task-retry re-stage
         .withWriteMode(if (fileSuffix.isDefined) ParquetFileWriter.Mode.OVERWRITE
           else ParquetFileWriter.Mode.CREATE)
@@ -2950,13 +2991,7 @@ class DocStoreDataWriter(
 
   override def commit(): WriterCommitMessage = {
     writers.values.foreach(_.close())
-    val ndv = relByDir.toSeq.map { case (dir, rel) =>
-      val sk = sketches(dir)
-      rel -> dataFields.zipWithIndex.collect {
-        case ((_, f), j) if ndvTracked(j) => f.name -> sk(j).estimate()
-      }
-    }
-    DocStoreCommitMessage(files.toSeq, ndv)
+    DocStoreCommitMessage(files.toSeq)
   }
 
   override def abort(): Unit = close()
@@ -2984,10 +3019,10 @@ object DocStore {
     * reader opens files through `HadoopInputFile` over this conf and
     * passes its projection through the read support, and footer reads
     * pass read options built from this conf. Nothing may `set` a key
-    * here; the file writer, whose parquet write support stores its
-    * schema in the conf it is given, copies it
-    * (`new Configuration(hadoopConf)`). Resources are
-    * force-loaded once at init, so a user of this conf pays no parse. */
+    * here; the file writer uses it as is, because its write support
+    * ([[GroupWriterBuilder]]) takes the schema directly instead of
+    * through the conf. Resources are force-loaded once at init, so a
+    * user of this conf pays no parse. */
   val hadoopConf: Configuration = {
     val c = new Configuration()
     c.get("fs.defaultFS"): Unit
@@ -2996,10 +3031,12 @@ object DocStore {
 
   /** Fixed 2¹¹-register hyperloglog over 64-bit hashes — the sink's
     * per-file, per-column NDV measurement (~2.3% typical error, 2 KB
-    * per column WHILE writing, one Long per column once committed as
-    * the `#stat` line's ndv field). The one planning statistic a
-    * parquet footer cannot yield, measured at the only moment it is
-    * free: while the writer already has every row in hand. */
+    * per column WHILE writing, one Long per column once written). The
+    * one planning statistic parquet's own column statistics lack,
+    * measured at the only moment it is free: while the writer already
+    * has every row in hand. The estimates travel in the file's footer
+    * ([[NdvFooterKey]]) and land in the `#stat` line of the commit that
+    * publishes the file. */
   final class NdvSketch {
     private val p = 11
     private val m = 1 << p
@@ -3025,6 +3062,36 @@ object DocStore {
       val est = if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) else raw
       math.max(1L, math.round(est))
     }
+  }
+
+  /** Footer key-value entry holding a docstore-written file's NDV
+    * estimates: `name=estimate` pairs joined by `;`, names URL-encoded.
+    * Files written by anything else lack it, and their `#stat` lines
+    * carry no ndv. */
+  val NdvFooterKey = "docstore.ndv"
+
+  /** Parquet writer of example `Group`s whose footer carries the NDV
+    * estimates `ndv` returns once the last row is in. A builder of its
+    * own because `ExampleParquetWriter.Builder`'s constructors are
+    * private; its write support takes the schema directly, so the
+    * Hadoop conf it is given stays untouched. */
+  final class GroupWriterBuilder(file: OutputFile, schema: MessageType,
+      ndv: () => Map[String, Long])
+      extends ParquetWriter.Builder[Group, GroupWriterBuilder](file) {
+    override protected def self(): GroupWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[Group] =
+      new WriteSupport[Group] {
+        private var writer: GroupWriter = _
+        override def init(conf: Configuration): WriteSupport.WriteContext =
+          new WriteSupport.WriteContext(schema, java.util.Collections.emptyMap[String, String]())
+        override def prepareForWrite(rc: RecordConsumer): Unit =
+          writer = new GroupWriter(rc, schema)
+        override def write(g: Group): Unit = writer.write(g)
+        override def finalizeWrite(): WriteSupport.FinalizedWriteContext =
+          new WriteSupport.FinalizedWriteContext(java.util.Collections.singletonMap(
+            NdvFooterKey, ndv().map { case (n, v) =>
+              s"${java.net.URLEncoder.encode(n, "UTF-8")}=$v" }.mkString(";")))
+      }
   }
 
   /** Is `dt` a type the sink NDV-sketches? (Flat comparable values;
@@ -3208,9 +3275,11 @@ object DocStore {
       }
     }
 
-  /** Append `df` to a private staging store (compaction's rewrite, the
-    * upsert sink's publish), routed by `partitionBy` and filtered on
-    * `bloomFor` — the owning store's [[bloomColumns]]. */
+  /** Append `df` to a private staging store, routed by `partitionBy`
+    * and filtered on `bloomFor` — the owning store's [[bloomColumns]].
+    * The upsert sink's publish is the one caller: its commit binds
+    * deletion-vector fragments beside the new files, which the batch
+    * write does not carry. */
   def writeStaged(df: DataFrame, staging: String, partitionBy: Seq[String],
       bloomFor: Seq[String], sortBy: Seq[String] = Nil,
       rowGroupBytes: Option[Long] = None): Unit =
@@ -3308,6 +3377,19 @@ object DocStore {
         s"docstore: cannot parse filters option predicate '$other' — " +
           "supported: col op literal (= != <> < <= > >=), col IS [NOT] NULL, " +
           "joined by AND")
+    }
+  }
+
+  /** Publish staged files: rename each rel under `staging` to the same
+    * rel under the store root. On a snapshot store a published file
+    * stays invisible until a manifest swap names it. */
+  def publish(path: String, staging: String, rels: Seq[String]): Unit = {
+    val fs = new Path(path).getFileSystem(hadoopConf)
+    rels.foreach { rel =>
+      val dst = new Path(path, rel)
+      fs.mkdirs(dst.getParent)
+      require(fs.rename(new Path(staging, rel), dst),
+        s"docstore: publish rename failed for $rel staged under $staging")
     }
   }
 
@@ -3981,21 +4063,14 @@ object DocStore {
     * would report a version that holds someone else's content. */
   def commitSnapshot(path: String, staleClaimGraceMs: Long = 30000L,
       op: String = "append", branch: Option[String] = None,
-      ndvHints: Map[String, Map[String, Long]] = Map.empty)(
+      partSpec: Option[Seq[String]] = None)(
       update: Seq[String] => Seq[String]): Long =
-    commitSnapshotWithDvs(path, staleClaimGraceMs, op, branch = branch,
-      ndvHints = ndvHints) { (base, dvs) =>
+    commitSnapshotWithDvs(path, staleClaimGraceMs, op, partSpec, branch) { (base, dvs) =>
       // plain entry-set commits carry existing DV bindings through
       // unchanged; bindings of retired entries are pruned by the core
       (update(base), dvs)
     }
 
-  /** [[commitSnapshot]] with DELETION-VECTOR bindings in the update:
-    * the closure sees (entries, dvByDataRel) of the base snapshot and
-    * returns both for the new one. Bindings whose data file is not in
-    * the returned entry list are dropped (a retired file's DV dies
-    * with it); DV sidecar files themselves are immutable and live in
-    * `_deletes/` — vacuum reclaims unreferenced ones. */
   /** A version file references at most this many chained delta
     * manifests; the commit that would exceed it writes ONE
     * consolidated manifest instead (Delta's checkpoint cadence). Keeps
@@ -4003,6 +4078,12 @@ object DocStore {
     * consolidation write to 1/16th of commits. */
   val ConsolidateChainLen = 16
 
+  /** [[commitSnapshot]] with DELETION-VECTOR bindings in the update:
+    * the closure sees (entries, dvByDataRel) of the base snapshot and
+    * returns both for the new one. Bindings whose data file is not in
+    * the returned entry list are dropped (a retired file's DV dies
+    * with it); DV sidecar files themselves are immutable and live in
+    * `_deletes/` — vacuum reclaims unreferenced ones. */
   def commitSnapshotWithDvs(path: String, staleClaimGraceMs: Long = 30000L,
       op: String = "append",
       // Some(cols) changes the store's partition ROUTING from this
@@ -4012,10 +4093,7 @@ object DocStore {
       // its ref; None advances `main` once refs exist (default writes
       // stay on the published branch) and is the plain linear commit
       // on ref-less stores
-      branch: Option[String] = None,
-      // writer-measured per-file per-column NDV estimates, merged into
-      // the `#stat` lines this commit computes for its ADDED entries
-      ndvHints: Map[String, Map[String, Long]] = Map.empty)(
+      branch: Option[String] = None)(
       update: (Seq[String], Map[String, String]) => (Seq[String], Map[String, String])): Long = {
     val root = new Path(path)
     val conf = DocStore.hadoopConf
@@ -4032,14 +4110,7 @@ object DocStore {
     val statCache = mutable.Map.empty[String, Option[String]]
     def computeStatOf(rel: String): Option[String] =
       statCache.getOrElseUpdate(rel,
-        try {
-          val st0 = computeFileStat(new Path(root, rel).toString)
-          val hints = ndvHints.getOrElse(rel, Map.empty)
-          val st = if (hints.isEmpty) st0 else st0.copy(cols = st0.cols.map {
-            case (n, c) => n -> c.copy(ndv = hints.get(n).orElse(c.ndv))
-          })
-          Some(encodeStat(st))
-        }
+        try Some(encodeStat(computeFileStat(new Path(root, rel).toString)))
         catch { case scala.util.control.NonFatal(_) => None })
     while (claimAttempts < 100 && System.currentTimeMillis() < deadline) {
       val head = snapshotVersions(path).lastOption
@@ -4254,8 +4325,9 @@ object DocStore {
       // v2 extensions (absent in pre-r18 stat lines): the column's
       // uncompressed byte size in this file (projected-size estimates
       // without a footer) and the WRITER-measured approximate distinct
-      // count (HLL at write time — the one statistic a footer cannot
-      // yield), surfaced to Spark's CBO as connector column stats
+      // count (HLL at write time, read from the file's footer entry
+      // [[NdvFooterKey]]), surfaced to Spark's CBO as connector column
+      // stats
       bytes: Option[Long] = None, ndv: Option[Long] = None)
 
   /** One data file's commit-time statistics: exact row count, total
@@ -4273,8 +4345,7 @@ object DocStore {
     * between metadata-only planning and O(files) GETs on a cold
     * driver over a 100 TB store. */
   def computeFileStat(abs: String): FileStat = {
-    val schema = fileSchema(abs)
-    val blocks = footerBlocks(abs)
+    val (schema, blocks, ndv) = footerOf(abs)
     val rows = blocks.map(_.getRowCount).sum
     val bytes = blocks.flatMap(_.getColumns.asScala.map(_.getTotalUncompressedSize)).sum
     val cols = schema.getFields.asScala.toSeq.filter(_.isPrimitive).flatMap { f =>
@@ -4317,7 +4388,8 @@ object DocStore {
           if (mms.isEmpty) None else Some(mms.map(_._1).min),
           if (mms.isEmpty) None else Some(mms.map(_._2).max),
           flat.map(_._2).sum,
-          bytes = Some(colBytes)))
+          bytes = Some(colBytes),
+          ndv = ndv.get(name)))
       }
     }.toMap
     FileStat(rows, bytes, cols)
@@ -5138,8 +5210,8 @@ object DocStore {
     * name, new bytes) misses the stale entry; the staged-commit sink
     * never reuses names anyway. Bounded: cleared wholesale past 8192
     * entries (footers are small; this is a planning cache, not state). */
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (MessageType, Seq[BlockMetaData])]()
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (MessageType, Seq[BlockMetaData], Map[String, Long])]()
 
   /** Footer consultations since JVM start — cache hits INCLUDED: a hit
     * still means planning depended on a footer, which is exactly what
@@ -5156,7 +5228,8 @@ object DocStore {
   private lazy val footerReadOptions =
     HadoopReadOptions.builder(DocStore.hadoopConf).build()
 
-  private def footerOf(file: String): (MessageType, Seq[BlockMetaData]) = {
+  /** (schema, row groups, the [[NdvFooterKey]] estimates) of a file. */
+  private def footerOf(file: String): (MessageType, Seq[BlockMetaData], Map[String, Long]) = {
     footerConsults.incrementAndGet()
     if (footerLogEnabled) footerConsultLog.add(file): Unit
     val p = new Path(file)
@@ -5171,18 +5244,17 @@ object DocStore {
         HadoopInputFile.fromPath(p, DocStore.hadoopConf), footerReadOptions)
       try {
         val f = r.getFooter
-        (f.getFileMetaData.getSchema, f.getBlocks.asScala.toSeq)
+        val meta = f.getFileMetaData
+        (meta.getSchema, f.getBlocks.asScala.toSeq,
+          Option(meta.getKeyValueMetaData.get(NdvFooterKey)).toSeq
+            .flatMap(_.split(";")).map(_.split("=", 2)).collect {
+              case Array(n, v) => java.net.URLDecoder.decode(n, "UTF-8") -> v.toLong
+            }.toMap)
       } finally r.close()
     })
   }
 
   def fileSchema(file: String): MessageType = footerOf(file)._1
-
-  /** (startingPos, compressedSize) of each row group — the split
-    * boundaries; each partition's byte range contains exactly its own
-    * block's midpoint. */
-  def blocksOf(file: String): Seq[(Long, Long)] =
-    footerBlocks(file).map(b => (b.getStartingPos, b.getCompressedSize))
 
   /** Full row-group metadata (counts + column statistics) — what the
     * aggregate-pushdown scan answers queries from. */

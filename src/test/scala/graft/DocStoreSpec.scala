@@ -1549,13 +1549,14 @@ class DocStoreSpec extends SparkSpec {
     def answer() = spark.read.format("docstore").option("path", store).load()
       .as[(Long, String, String)].collect().toSeq.sorted
     val before = answer()
-    assert(DocStore.listFiles(store).size == 6)
+    val filesBefore = DocStore.listFiles(store).toSet
+    assert(filesBefore.size == 6)
     val st = graft.sources.DocStoreMaintenance.compact(spark, store,
       rowGroupBytes = Some(4096L))
     assert(st.filesIn == 6 && st.filesOut == 2, s"compaction: $st")
     assert(answer() == before, "compaction changed the answer")
     val files = DocStore.listFiles(store)
-    assert(files.size == 2 && files.forall(_.contains("compact-")))
+    assert(files.size == 2 && files.forall(f => !filesBefore(f)))
     val absent = 1L // odd: every key is even
     files.foreach { f =>
       val blooms = bloomChunks(f, "k")
@@ -1797,12 +1798,13 @@ class DocStoreSpec extends SparkSpec {
     spark.sql("ALTER TABLE cp_rename.db.t RENAME COLUMN price TO amount")
     spark.sql("INSERT INTO cp_rename.db.t VALUES (3L, 30.0)")
     val path = s"$root/db/t"
+    val filesBefore = DocStore.listFiles(path).toSet
     val st = graft.sources.DocStoreMaintenance.compact(spark, path)
     assert(st.filesIn == 2 && st.filesOut == 1, s"compaction: $st")
     assert(spark.table("cp_rename.db.t").as[(Long, Double)].collect().toSeq.sorted ==
       Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)))
     val files = DocStore.listFiles(path)
-    assert(files.size == 1 && files.head.contains("compact-"), s"live files: $files")
+    assert(files.size == 1 && !filesBefore(files.head), s"live files: $files")
     val physical = DocStore.fileSchema(files.head)
     assert(physical.containsField("amount") && !physical.containsField("price"),
       s"compacted file schema: $physical")
@@ -1845,11 +1847,51 @@ class DocStoreSpec extends SparkSpec {
     val (dirsBefore, before) = (dirs(), answer())
     assert(dirsBefore.map(_.head._2).toSet ==
       Set("00123", DocStore.HiveDefaultPartition, "7"))
+    val filesBefore = DocStore.listFiles(store).toSet
     val st = graft.sources.DocStoreMaintenance.compact(spark, store)
     assert(st.filesIn == 6 && st.filesOut == 3, s"compaction: $st")
-    assert(DocStore.listFiles(store).forall(_.contains("compact-")))
+    assert(DocStore.listFiles(store).forall(f => !filesBefore(f)))
     assert(dirs() == dirsBefore, s"directory text moved: $dirsBefore -> ${dirs()}")
     assert(answer() == before)
+  }
+
+  test("compaction's restricted overwrite replaces only its bins: other files keep path and length") {
+    import spark.implicits._
+    Seq(false, true).foreach { snapshots =>
+      val store = tmpDir(s"docstore_compact_bins_$snapshots")
+      def append(rows: Seq[(Long, String)], p: String): Unit =
+        rows.map { case (k, v) => (k, v, p) }.toDF("k", "v", "p").coalesce(1)
+          .write.format("docstore").option("path", store)
+          .option("snapshots", snapshots.toString)
+          .option("partitionBy", "p").mode("append").save()
+      // p=a: two small files (the one bin) beside one large file; p=b:
+      // a single small file, which no bin takes
+      append(Seq((1L, "a1")), "a")
+      append(Seq((2L, "a2")), "a")
+      append((100L until 20100L).map(k => (k, s"big$k")), "a")
+      append(Seq((3L, "b1")), "b")
+      def answer() = spark.read.format("docstore").option("path", store).load()
+        .select("k", "v", "p").as[(Long, String, String)].collect().toSeq.sorted
+      def lengths() = DocStore.listFiles(store).map(f => f -> DocStore.fileLen(f)).toMap
+      val (before, lensBefore) = (answer(), lengths())
+      val smallerThan = 16L << 10
+      val (small, outside) = lensBefore.partition { case (f, n) =>
+        f.contains("p=a") && n < smallerThan }
+      assert(small.size == 2 && outside.size == 2, s"fixture: $lensBefore")
+      val vBefore = DocStore.currentSnapshot(store).map(_._1)
+      val st = graft.sources.DocStoreMaintenance.compact(spark, store, smallerThan)
+      assert(st == graft.sources.DocStoreMaintenance.CompactStats(1, 2, 1,
+        vBefore.map(_ + 1)), s"snapshots=$snapshots: $st")
+      assert(answer() == before, s"snapshots=$snapshots: answers moved")
+      val lensAfter = lengths()
+      outside.foreach { case (f, n) =>
+        assert(lensAfter.get(f).contains(n), s"snapshots=$snapshots: $f moved or changed")
+      }
+      val added = lensAfter.keySet -- lensBefore.keySet
+      assert(added.size == 1 && added.head.contains("p=a") &&
+        small.keys.forall(f => !lensAfter.contains(f)),
+        s"snapshots=$snapshots: ${lensBefore.keys} -> ${lensAfter.keys}")
+    }
   }
 
   /** A 4-partition merge-on-read catalog table with deletion vectors

@@ -25,20 +25,74 @@ class NdvStatsSpec extends SparkSpec {
   }
 
   test("sink writes per-column NDV and bytes into #stat; estimates within HLL tolerance") {
+    // 10k rows: k unique (10000 distinct), grp (7), v strings (1000);
+    // p has one value, so a write clustered by it makes one file
+    val rows = (0L until 10000L).map(i => (i, i % 7, s"s${i % 1000}", "x"))
+    def data = rows.toDF("k", "grp", "v", "p")
+    /** The `#stat` of the one file the current snapshot holds beyond `before`. */
+    def newFileStat(store: String, before: Set[String]): DocStore.FileStat = {
+      val (v, rels) = DocStore.currentSnapshot(store).get
+      val added = rels.filterNot(before)
+      assert(added.size == 1, s"expected one new file in $store: $added")
+      DocStore.readManifestStats(store, v)(added.head)
+    }
+    def liveRels(store: String) = DocStore.currentSnapshot(store).get._2.toSet
+    def assertNdv(what: String, st: DocStore.FileStat): Unit = {
+      def ndv(c: String): Long =
+        st.cols(c).ndv.getOrElse(fail(s"$what: no ndv for $c in $st"))
+      assert(math.abs(ndv("k") - 10000L) <= 500L, s"$what k ${ndv("k")}")   // ~2.3% err
+      assert(ndv("grp") == 7L, s"$what grp ${ndv("grp")}")                  // small-range exact
+      assert(math.abs(ndv("v") - 1000L) <= 60L, s"$what v ${ndv("v")}")
+      // v2 stat lines carry per-column bytes
+      assert(st.cols.values.forall(_.bytes.exists(_ > 0L)), s"$what bytes: $st")
+    }
+
+    // a plain batch append
     val store = tmpDir("ndv_store")
-    // 10k rows: k unique (10000 distinct), grp (7), v strings (1000)
-    (0L until 10000L).map(i => (i, i % 7, s"s${i % 1000}"))
-      .toDF("k", "grp", "v").coalesce(1)
+    data.drop("p").coalesce(1)
       .write.format("docstore").option("path", store)
       .option("snapshots", "true").mode("append").save()
-    val (v, rels) = DocStore.currentSnapshot(store).get
-    val st = DocStore.readManifestStats(store, v)(rels.head)
-    def ndv(c: String): Long = st.cols(c).ndv.get
-    assert(math.abs(ndv("k") - 10000L) <= 500L, ndv("k").toString)   // ~2.3% err
-    assert(ndv("grp") == 7L, ndv("grp").toString)                    // small-range exact
-    assert(math.abs(ndv("v") - 1000L) <= 60L, ndv("v").toString)
-    // v2 stat lines carry per-column bytes
-    assert(st.cols.values.forall(_.bytes.exists(_ > 0L)))
+    assertNdv("append", newFileStat(store, Set.empty))
+
+    // the file a merge-on-read MERGE inserts
+    if (spark.conf.getOption("spark.sql.catalog.ndvcat").isEmpty) {
+      spark.conf.set("spark.sql.catalog.ndvcat", "graft.sources.DocStoreCatalog")
+      spark.conf.set("spark.sql.catalog.ndvcat.root", tmpDir("ndv_cat"))
+    }
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ndvcat.db")
+    spark.sql("""CREATE TABLE ndvcat.db.m (k BIGINT, grp BIGINT, v STRING, p STRING)
+      USING docstore PARTITIONED BY (p) TBLPROPERTIES ('rowlevel'='mor')""")
+    spark.sql("INSERT INTO ndvcat.db.m VALUES (-1, 0, 'seed', 'x')")
+    val morPath = s"${spark.conf.get("spark.sql.catalog.ndvcat.root")}/db/m"
+    val beforeMerge = liveRels(morPath)
+    data.createOrReplaceTempView("ndv_src")
+    spark.sql("""MERGE INTO ndvcat.db.m t USING ndv_src s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *""")
+    assertNdv("merge-on-read insert", newFileStat(morPath, beforeMerge))
+
+    // a compaction's output
+    val compacted = tmpDir("ndv_compact")
+    rows.grouped(2500).foreach(part =>
+      part.toDF("k", "grp", "v", "p").coalesce(1)
+        .write.format("docstore").option("path", compacted)
+        .option("snapshots", "true").mode("append").save())
+    val beforeCompact = liveRels(compacted)
+    val cs = graft.sources.DocStoreMaintenance.compact(spark, compacted)
+    assert(cs.filesIn == 4 && cs.filesOut == 1, s"compaction: $cs")
+    assertNdv("compaction", newFileStat(compacted, beforeCompact))
+
+    // a file the streaming upsert sink publishes
+    val upserted = tmpDir("ndv_upsert")
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long, String, String)](spark)
+    in.addData(rows: _*)
+    in.toDF().toDF("k", "grp", "v", "p")
+      .writeStream.format("docstore").option("path", upserted)
+      .option("mode", "upsert").option("keys", "k").option("partitionBy", "p")
+      .option("checkpointLocation", tmpDir("ndv_upsert_cp"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    assertNdv("upsert sink", newFileStat(upserted, Set.empty))
   }
 
   test("estimateStatistics answers from the manifest: zero footers, column stats surfaced") {

@@ -61,6 +61,29 @@ class PartitionEvolutionSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("compaction of unpartitioned files after a spec y is set keeps them unpartitioned") {
+    import spark.implicits._
+    val store = tmpDir("partevo_compact_flat")
+    def append(df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.format("docstore").option("path", store)
+        .option("snapshots", "true").mode("append").save()
+    // two small unpartitioned files: the one bin
+    append(Seq((1L, "a")).toDF("k", "v"))
+    append(Seq((2L, "b")).toDF("k", "v"))
+    DocStoreMaintenance.setPartitionSpec(store, Seq("y")): Unit
+    append(Seq((3L, "c", "2021")).toDF("k", "v", "y"))
+    def answer() = spark.read.format("docstore").option("path", store).load()
+      .select("k", "v", "y").as[(Long, String, Option[String])].collect().toSeq.sorted
+    val before = answer()
+    val filesBefore = DocStore.listFiles(store).toSet
+    val st = DocStoreMaintenance.compact(spark, store)
+    assert(st.filesIn == 2 && st.filesOut == 1, s"compaction: $st")
+    val compacted = DocStore.listFiles(store).filterNot(filesBefore)
+    assert(compacted.size == 1 && !compacted.head.contains("y="),
+      s"compacted files: $compacted")
+    assert(answer() == before)
+  }
+
   test("compaction of an old-layout bin after y -> y,m writes no physical m and keeps the schema (k,v,y,m)") {
     import spark.implicits._
     val store = tmpDir("partevo_compact")
@@ -81,9 +104,10 @@ class PartitionEvolutionSpec extends SparkSpec {
     val expected = Seq((1L, "a", "2020", None), (2L, "b", "2020", None),
       (3L, "c", "2021", Some("01")))
     assert(answer() == expected)
+    val filesBefore = DocStore.listFiles(store).toSet
     val st = DocStoreMaintenance.compact(spark, store)
     assert(st.filesIn == 2 && st.filesOut == 1, s"compaction: $st")
-    val compacted = DocStore.listFiles(store).filter(_.contains("compact-"))
+    val compacted = DocStore.listFiles(store).filterNot(filesBefore)
     assert(compacted.size == 1 && compacted.head.contains("y=2020") &&
       !compacted.head.contains("m="), s"compacted files: $compacted")
     val physical = DocStore.toStructType(DocStore.fileSchema(compacted.head)).fieldNames.toSeq

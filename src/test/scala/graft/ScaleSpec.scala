@@ -539,21 +539,6 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("small-files compaction rewrites to the target file count, same data") {
-    val in = tmpDir("graft-frag")
-    val out = tmpDir("graft-compact")
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    li.repartition(32).write.mode("overwrite").parquet(in)
-    def parquetFiles(dir: String) =
-      Option(new java.io.File(dir).listFiles()).toSeq.flatten
-        .count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(in) == 32, "fragmented input fixture")
-    val rows = graft.etl.Compact.compact(spark, in, out, targetFiles = 4)
-    assert(parquetFiles(out) == 4, "compacted to target file count")
-    assert(rows == li.count())
-    assert(spark.read.parquet(out).count() == li.count())
-  }
-
   test("ANALYZE TABLE statistics reach the cost-based optimizer") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     li.write.mode("overwrite").saveAsTable("li_cbo")
