@@ -1509,10 +1509,11 @@ object EtlQueries {
         "`rowdelta` snapshot commit. The operation scan pushes the " +
         "predicate (unlike copy-on-write's group scan, which must read " +
         "whole groups), so the scan cost is the predicate's row-group " +
-        "survivors. Footer aggregate pushdown REFUSES under DVs " +
-        "(counts would include deleted rows); the aggregate below " +
-        "therefore reads data pages and still answers exactly — the " +
-        "oracle recomputes from the source.",
+        "survivors. Under DVs footer aggregate pushdown answers only " +
+        "COUNT(*) (file rows minus each vector's cardinality); the SUM " +
+        "below keeps the aggregate in Spark, which reads data pages " +
+        "and still answers exactly — the oracle recomputes from the " +
+        "source.",
       (s, dir) => {
         val cat = mutableCatalog(s)
         val ns = nsOf(dir)

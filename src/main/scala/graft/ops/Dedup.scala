@@ -18,9 +18,10 @@ object Dedup {
 
   /** Bigram shingles from an already-materialized token-array column,
     * distinct. Guarded for <2 tokens (sequence(1,0) would count down).
-    * `words` must be a plain column reference — passing `split(...)`
-    * directly would re-split the text per element access inside the
-    * lambda (O(words²) per doc). */
+    * `words` must be a plain column reference: passing `split(...)`
+    * directly re-splits the text at every element access inside the
+    * interpreted `transform` lambda (O(words²) per doc; see
+    * [[TextFns.wordGrams]]). */
   private def bigramShingles(words: Column): Column =
     array_distinct(TextFns.wordGrams(words, 2))
 
@@ -1186,7 +1187,9 @@ object Dedup {
     // CodegenFallback higher-order function) re-evaluates the array
     // builder per EMITTED row — O(shingles²) per doc, measured 14× on
     // the full-corpus pass — while the fused generator evaluates it
-    // once per input row.
+    // once per input row. Fusing does not stop the re-split INSIDE the
+    // lambda: `split(...)` goes straight into wordGrams, so each
+    // element access splits the text again (see TextFns.wordGrams).
     val shingleExpr =
       array_distinct(TextFns.wordGrams(split(col("text"), " "), width))
     shingleJaccardStats(

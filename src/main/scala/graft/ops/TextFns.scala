@@ -39,10 +39,16 @@ object TextFns {
        |   THEN acc[1:len(acc) - 1] || [$l || $r] ELSE acc || x END) END"""
       .stripMargin.replaceAll("\n", "")
 
-  /** Word k-grams as a codegen'd HOF over a pre-split token array,
-    * guarded for docs shorter than k. `words` must be a materialized
-    * array column — passing `split(...)` directly would re-split the
-    * text per element access inside the lambda (O(words²) per doc). */
+  /** Word k-grams as a `transform` over a token array, guarded for docs
+    * shorter than k. `transform` is a CodegenFallback higher-order
+    * function: it runs interpreted, once per row, even inside a
+    * codegen'd stage. `words` is inlined into the lambda, so it should
+    * be a reference to a materialized array column: passing `split(...)`
+    * directly re-splits the text at every `element_at` in the lambda,
+    * k splits per gram and O(words²) per doc (the optimized plan shows
+    * `element_at(split(text, ' ', -1), lambda x)` inside the
+    * `transform`). The corpus shingle builders in Dedup, Pipeline and
+    * Text still pass `split(...)`. */
   def wordGrams(words: Column, k: Int): Column =
     when(size(words) < k, array().cast(ArrayType(StringType)))
       .otherwise(transform(

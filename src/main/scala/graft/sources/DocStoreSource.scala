@@ -359,6 +359,8 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
   // manifest stats backing an accepted aggregate (file → stat):
   // non-empty ⇒ the agg scan answers with ZERO footer reads
   private var aggStats: Map[String, DocStore.FileStat] = Map.empty
+  // rows deleted by each surviving file's deletion vector (file → count)
+  private var aggDeleted: Map[String, Long] = Map.empty
   private var limit: Option[Int] = None
   private var topN: Option[(Seq[String], Boolean, Int)] = None // (cols, desc, k)
 
@@ -482,12 +484,13 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
     * ZERO data pages — footers only. Any non-partition grouping
     * refuses pushdown (footer stats can't group by data values).
     * Refused unless every value is provably exact — see the class
-    * doc. */
+    * doc. While deletion vectors are live only `COUNT(*)` is pushed:
+    * a file's live rows are its footer rows minus the cardinality of
+    * the vector bound to it at the read version (a 12-byte header
+    * read), but a deleted row may hold a column's extreme or null, so
+    * `COUNT(col)`, `MIN` and `MAX` stay in Spark and the scan applies
+    * the vectors row-side. */
   override def pushAggregation(agg: Aggregation): Boolean = {
-    // deletion vectors invalidate footer statistics (counts include
-    // deleted rows; a min/max row may be deleted) — the aggregate
-    // stays in Spark and the scan applies the DVs row-side
-    if (DocStore.dvMap(path, versionAsOf).nonEmpty) return false
     // the statistics scan answers for the whole read version
     if (onlyFiles.isDefined) return false
     val grpRefs = agg.groupByExpressions.toSeq.map(e =>
@@ -513,6 +516,9 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
     }
     if (specs.exists(_.isEmpty)) return false
     val flat = specs.flatten
+    // the same bindings the row scan would apply (its dvByRel)
+    val dvs = DocStore.dvMap(path, versionAsOf)
+    if (dvs.nonEmpty && flat.exists(_ != DocStore.CountStarSpec)) return false
     val statCols = flat.collect {
       case DocStore.CountColSpec(c) => c
       case DocStore.MinSpec(c) => c
@@ -548,6 +554,11 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
     }
     if (!ok) return false
     aggStats = statsAnswer
+    // only snapshot stores carry vectors (a single-file store has no rel)
+    if (dvs.nonEmpty) aggDeleted = files.flatMap { f =>
+      dvs.get(DocStore.relOf(path, f))
+        .map(dv => f -> DocStore.dvCardinality(new Path(path, dv).toString))
+    }.toMap
     // scan output layout (Spark's partial-pushdown contract): grouping
     // columns FIRST — typed as the table declares them (partition
     // columns are StringType) — then one field per aggregate
@@ -577,7 +588,8 @@ class DocStoreScanBuilder(path: String, tableSchema: StructType,
 
   override def build(): Scan = aggSpecs match {
     case Some((grpCols, specs, schema)) =>
-      DocStoreAggScan(path, schema, grpCols, specs, pushed, versionAsOf, aggStats)
+      DocStoreAggScan(path, schema, grpCols, specs, pushed, versionAsOf, aggStats,
+        aggDeleted)
     case None =>
       DocStoreScan(path, tableSchema, required, pushed, streamOpts,
         limitHint = limit, topNHint = topN, versionAsOf = versionAsOf,
@@ -1809,7 +1821,10 @@ case class DocStoreAggScan(
     // time and the readers open no footer at all — metadata-only both
     // in planning and execution. Empty → per-file footer fallback
     // (plain stores, pre-stat manifests).
-    statsByFile: Map[String, DocStore.FileStat] = Map.empty) extends Scan with Batch {
+    statsByFile: Map[String, DocStore.FileStat] = Map.empty,
+    // rows each file's deletion vector removes at the read version
+    // (file → cardinality); only count(*) is pushed while any is live
+    deletedByFile: Map[String, Long] = Map.empty) extends Scan with Batch {
 
   override def readSchema(): StructType = aggSchema
 
@@ -1827,10 +1842,10 @@ case class DocStoreAggScan(
   /** Agg slot values for one file, straight from its manifest stat —
     * boxed per the DECLARED agg-schema type (see the reader's
     * extremum doc for why the declared type governs). */
-  private def precomputedFor(st: DocStore.FileStat): Seq[Any] = {
+  private def precomputedFor(st: DocStore.FileStat, deleted: Long): Seq[Any] = {
     val aggTypes = aggSchema.fields.drop(grpCols.length).map(_.dataType)
     specs.zipWithIndex.map {
-      case (DocStore.CountStarSpec, _) => st.rows
+      case (DocStore.CountStarSpec, _) => st.rows - deleted
       case (DocStore.CountColSpec(c), _) => st.rows - st.cols(c).nulls
       case (DocStore.MinSpec(c), i) => box(st.cols(c).min, aggTypes(i))
       case (DocStore.MaxSpec(c), i) => box(st.cols(c).max, aggTypes(i))
@@ -1853,8 +1868,10 @@ case class DocStoreAggScan(
       else Array.empty
     } else files.map { case (f, pv) =>
       val pvMap = pv.toMap
+      val deleted = deletedByFile.getOrElse(f, 0L)
       DocStoreAggPartition(Some(f), grpCols.map(pvMap.get), grpTypes,
-        precomputed = statsByFile.get(f).map(precomputedFor))
+        precomputed = statsByFile.get(f).map(precomputedFor(_, deleted)),
+        deletedRows = deleted)
     }.toArray
   }
 
@@ -1869,7 +1886,9 @@ case class DocStoreAggPartition(
     grpTypes: Seq[DataType] = Nil,
     // agg slot values precomputed from manifest stats at plan time —
     // when set, the reader touches NO file at all
-    precomputed: Option[Seq[Any]] = None) extends InputPartition
+    precomputed: Option[Seq[Any]] = None,
+    // rows the file's deletion vector removes, subtracted from count(*)
+    deletedRows: Long = 0L) extends InputPartition
 
 case class DocStoreAggReaderFactory(specs: Seq[DocStore.AggSpec],
     grpTypes: Seq[DataType] = Nil,
@@ -1918,7 +1937,7 @@ class DocStoreAggReader(part: DocStoreAggPartition, specs: Seq[DocStore.AggSpec]
         val schema = DocStore.fileSchema(f)
         specs.zipWithIndex.foreach {
           case (DocStore.CountStarSpec, i) =>
-            row.update(nGrp + i, blocks.map(_.getRowCount).sum)
+            row.update(nGrp + i, blocks.map(_.getRowCount).sum - part.deletedRows)
           case (DocStore.CountColSpec(c), i) =>
             row.update(nGrp + i, blocks.map { b =>
               b.getRowCount - statsOf(b, c).getNumNulls
@@ -4335,7 +4354,8 @@ object DocStore {
     * whose footer statistics were complete. Describes the PHYSICAL
     * file — a deletion vector only shrinks matches, so stat-based
     * file SKIPPING stays sound under DVs while counts become upper
-    * bounds (aggregate answering already refuses under DVs). */
+    * bounds (aggregate answering subtracts each vector's cardinality
+    * for COUNT(*) and refuses every other aggregate under DVs). */
   final case class FileStat(rows: Long, bytes: Long, cols: Map[String, ColStat])
 
   /** Compute a file's manifest statistics from its footer — called

@@ -1,7 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Source abstraction (SURVEY §7.5): the engine's operators read tables
   * through this trait so the offline parquet harness and a production
@@ -23,13 +29,21 @@ trait TableSource {
   * corrupt them (2024 epoch-ns > 2^53). Strictly opt-in: with the
   * default empty set no column is touched and no session flag is set,
   * so a plain long column that happens to be named `ts` passes through
-  * verbatim (production would carry this annotation in the catalog). */
+  * verbatim (production would carry this annotation in the catalog).
+  *
+  * The schema comes from one footer read on the driver
+  * ([[ParquetDirSource.footerSchema]]) and is handed to
+  * `spark.read.schema(_).parquet`, so a read launches no Spark job:
+  * `spark.read.parquet`'s own inference runs a one-task job just to
+  * read that footer. */
 final case class ParquetDirSource(
     dir: String,
     nsTimestampCols: Set[String] = Set.empty) extends TableSource {
   override def read(spark: SparkSession, table: String): DataFrame = {
     if (nsTimestampCols.nonEmpty) ParquetDirSource.prepareSession(spark)
-    val df = spark.read.parquet(s"$dir/$table.parquet")
+    val path = s"$dir/$table.parquet"
+    val df = ParquetDirSource.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     df.schema.fields.foldLeft(df) { (acc, f) =>
       if (nsTimestampCols.contains(f.name) && f.dataType == org.apache.spark.sql.types.LongType)
         acc.withColumn(f.name,
@@ -60,6 +74,54 @@ object ParquetDirSource {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       java.lang.Boolean.TRUE
     })
+
+  /** The schema `spark.read.parquet(path)` infers, read from the footer
+    * its inference would touch: with schema merging off, Spark takes
+    * `_common_metadata`, then `_metadata`, then the first data file in
+    * path order, skipping names that start with `_` or `.`. The footer
+    * is converted by Spark's own converter over the session conf, so
+    * `nanosAsLong`, NTZ inference and binary-as-string apply exactly as
+    * in inference, and opened over the context's Hadoop conf (no new
+    * `Configuration`, whose parse dominates a footer read). None where
+    * Spark must infer itself: merging on, a missing path, no file to
+    * read, or subdirectories (partition discovery) — so any error
+    * stays Spark's own. */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sqlConf = org.apache.spark.sql.graftshim.CatalystBridge.sqlConf(spark)
+    if (sqlConf.isParquetSchemaMergingEnabled) return None
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(hconf)
+    val status = scala.util.Try(fs.getFileStatus(root)).toOption
+    val files: Seq[FileStatus] = status match {
+      case None => return None
+      case Some(st) if st.isFile => Seq(st)
+      case Some(_) =>
+        val visible = fs.listStatus(root).toSeq.filter(f => keep(f.getPath.getName))
+        if (visible.exists(_.isDirectory)) return None
+        visible.sortBy(_.getPath.toString)
+    }
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summaries(f.getPath.getName)))
+      .map { f =>
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hconf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+          new ParquetToSparkSchemaConverter(sqlConf))
+      }
+  }
+
+  // Spark's listing filter: hidden and `_`-prefixed names are skipped,
+  // except the two summary files and `_k=v`-style partition directories
+  private def keep(name: String): Boolean =
+    name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ||
+      name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE) ||
+      !((name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_"))
 }
 
 /** MongoDB source via the Spark MongoDB connector (the production path

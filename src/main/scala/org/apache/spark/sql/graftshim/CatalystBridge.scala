@@ -26,6 +26,11 @@ object CatalystBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.analyzed
 
+  /** The session's SQL conf (`sessionState` lives on the classic
+    * session, not on the API type). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
   /** Block until every queued listener-bus event has been delivered —
     * QueryExecutionListener callbacks are asynchronous, so a metrics
     * reader that runs right after an action needs this barrier

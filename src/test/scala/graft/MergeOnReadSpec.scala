@@ -27,6 +27,20 @@ class MergeOnReadSpec extends SparkSpec {
   private def dataRels(path: String): Set[String] =
     DocStore.currentSnapshot(path).map(_._2.toSet).getOrElse(Set.empty)
 
+  private def isPushed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("PushedAggregation")
+
+  /** `count(*)` of `df`, asserting the scan answered it from metadata. */
+  private def pushedCount(df: org.apache.spark.sql.DataFrame): Long = {
+    val q = df.agg(count(lit(1)))
+    assert(isPushed(q), q.queryExecution.executedPlan.toString)
+    q.head.getLong(0)
+  }
+
+  /** The row count of `df` from a scan of every live row. */
+  private def scannedCount(df: org.apache.spark.sql.DataFrame): Long =
+    df.collect().length.toLong
+
   test("MoR DELETE with a data predicate: answer exact, zero files rewritten, DV bound in the manifest") {
     val root = tmpDir("mor_root")
     ensureCat("mor", root)
@@ -52,11 +66,13 @@ class MergeOnReadSpec extends SparkSpec {
     assert(DocStore.commitOp(path, vAfter) == "rowdelta")
     val dvs = DocStore.readManifestDvs(path, vAfter)
     assert(dvs.nonEmpty && dvs.keySet.subsetOf(after), dvs.toString)
-    // aggregates stay exact (footer pushdown must refuse under DVs)
+    // aggregates stay exact: count(*) is answered from metadata (file
+    // rows minus vector cardinality); min/max stay in Spark, since a
+    // deleted row may hold the extreme
     val agg = spark.table("mor.db.t").agg(count(lit(1)), min("k"), max("k")).head
     assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) == ((3L, 1L, 5L)))
-    assert(!spark.table("mor.db.t").agg(count(lit(1)))
-      .queryExecution.executedPlan.toString.contains("PushedAggregation"))
+    assert(pushedCount(spark.table("mor.db.t")) == scannedCount(spark.table("mor.db.t")))
+    assert(!isPushed(spark.table("mor.db.t").agg(min("k"), max("k"))))
     // time travel: the pre-delete version still carries all five rows
     assert(spark.read.format("docstore").option("path", path)
       .option("versionAsOf", vBefore.toString).load().count() == 5)
@@ -65,6 +81,52 @@ class MergeOnReadSpec extends SparkSpec {
     assert(spark.table("mor.db.t").select("k").as[Long](spark.implicits.newLongEncoder)
       .collect().sorted.toSeq == Seq(1L, 3L))
     assert(dataRels(path) == before)
+  }
+
+  test("MoR COUNT(*) is answered from metadata through deletion vectors") {
+    val root = tmpDir("morcnt_root")
+    ensureCat("morcnt", root)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS morcnt.db")
+    spark.sql("""CREATE TABLE morcnt.db.t (k BIGINT, v STRING, p STRING)
+      USING docstore PARTITIONED BY (p) TBLPROPERTIES ('rowlevel'='mor')""")
+    spark.sql("""INSERT INTO morcnt.db.t SELECT /*+ COALESCE(1) */ * FROM VALUES
+      (1L,'a','x'),(2L,'b','x'),(3L,'c','y'),(4L,'d','y'),(5L,'e','y')
+      AS v(k, v, p)""")
+    val path = s"$root/db/t"
+    def t = spark.table("morcnt.db.t")
+    def byP(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val vBefore = DocStore.currentSnapshot(path).get._1
+    spark.sql("DELETE FROM morcnt.db.t WHERE k % 2 = 0")
+    assert(pushedCount(t) == 3L)
+    // a second delete merges into the y file's vector: cardinality 2
+    spark.sql("DELETE FROM morcnt.db.t WHERE k = 5")
+    assert(DocStore.dvMap(path, None).values.map(dv =>
+      DocStore.dvCardinality(s"$path/$dv")).toSeq.sorted == Seq(1L, 2L))
+    assert(pushedCount(t) == 2L && scannedCount(t) == 2L)
+    // GROUP BY the partition column: pushed, equal to the row scan
+    val grouped = t.groupBy("p").agg(count(lit(1)))
+    assert(isPushed(grouped), grouped.queryExecution.executedPlan.toString)
+    assert(byP(grouped) == Map("x" -> 1L, "y" -> 1L))
+    assert(byP(grouped) == byP(t.groupBy("p").agg(count("v"))))
+    // a merge-on-read MERGE update: delete plus insert
+    spark.sql("""MERGE INTO morcnt.db.t s USING (SELECT 3L AS k, 'C' AS v, 'y' AS p
+        UNION ALL SELECT 6L, 'f', 'x') c ON s.k = c.k
+      WHEN MATCHED THEN UPDATE SET v = c.v
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert(DocStore.dvMap(path, None).nonEmpty)
+    assert(pushedCount(t) == 3L && scannedCount(t) == 3L)
+    // the pre-delete version has no vectors and all five rows
+    val old = spark.read.format("docstore").option("path", path)
+      .option("versionAsOf", vBefore.toString).load()
+    assert(pushedCount(old) == 5L)
+    // count(col) and min/max stay in Spark while vectors are live
+    assert(!isPushed(t.agg(count("k"))) && !isPushed(t.agg(min("k"))) &&
+      !isPushed(t.agg(max("k"))))
+    // compaction materializes the vectors away; the count stays pushed
+    DocStoreMaintenance.compact(spark, path): Unit
+    assert(DocStore.dvMap(path, None).isEmpty)
+    assert(pushedCount(t) == 3L && scannedCount(t) == 3L)
   }
 
   test("MoR UPDATE and MERGE: delete+insert deltas, matched rows move without rewriting their files") {
