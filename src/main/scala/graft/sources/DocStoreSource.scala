@@ -1799,9 +1799,11 @@ class DocStoreSnapshotMicroBatchStream(
 // Aggregate pushdown: metadata-only scan
 // ---------------------------------------------------------------------------
 
-/** Statistics scan for pushed count/min/max: one partition per file,
-  * each emitting ONE pre-aggregated row combined from that file's
-  * row-group footers — zero data pages are read. With a pushed
+/** Statistics scan for pushed count/min/max: ONE pre-aggregated row
+  * per file, combined from that file's row-group footers — zero data
+  * pages are read. A file whose footers must be read gets its own
+  * partition; when manifest stats answered every file on the driver,
+  * one partition emits all the rows. With a pushed
   * partition-column GROUP BY, each row leads with its file's directory
   * values; Spark's final aggregation merges the per-file rows per
   * group (several files can share a partition directory). An empty
@@ -1866,13 +1868,19 @@ case class DocStoreAggScan(
     if (files.isEmpty) {
       if (grpCols.isEmpty) Array(DocStoreAggPartition(None, Nil))
       else Array.empty
-    } else files.map { case (f, pv) =>
-      val pvMap = pv.toMap
-      val deleted = deletedByFile.getOrElse(f, 0L)
-      DocStoreAggPartition(Some(f), grpCols.map(pvMap.get), grpTypes,
-        precomputed = statsByFile.get(f).map(precomputedFor(_, deleted)),
-        deletedRows = deleted)
-    }.toArray
+    } else {
+      val parts = files.map { case (f, pv) =>
+        val pvMap = pv.toMap
+        val deleted = deletedByFile.getOrElse(f, 0L)
+        DocStoreAggPartition(Some(f), grpCols.map(pvMap.get), grpTypes,
+          precomputed = statsByFile.get(f).map(precomputedFor(_, deleted)),
+          deletedRows = deleted)
+      }
+      // rows precomputed on the driver need no per-file task: one task
+      // emits them all; footer reads keep one task per file
+      if (parts.forall(_.precomputed.isDefined)) Array(DocStoreAggRows(parts))
+      else parts.toArray
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1890,13 +1898,25 @@ case class DocStoreAggPartition(
     // rows the file's deletion vector removes, subtracted from count(*)
     deletedRows: Long = 0L) extends InputPartition
 
+/** Several files' precomputed rows, emitted by one task. */
+case class DocStoreAggRows(parts: Seq[DocStoreAggPartition]) extends InputPartition
+
 case class DocStoreAggReaderFactory(specs: Seq[DocStore.AggSpec],
     grpTypes: Seq[DataType] = Nil,
     aggTypes: Seq[DataType] = Nil)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new DocStoreAggReader(partition.asInstanceOf[DocStoreAggPartition], specs,
-      grpTypes, aggTypes)
+    partition match {
+      case DocStoreAggRows(parts) =>
+        val rows = parts.iterator.map(new DocStoreAggReader(_, specs, grpTypes, aggTypes).get())
+        new PartitionReader[InternalRow] {
+          private var row: InternalRow = _
+          override def next(): Boolean = rows.hasNext && { row = rows.next(); true }
+          override def get(): InternalRow = row
+          override def close(): Unit = ()
+        }
+      case p: DocStoreAggPartition => new DocStoreAggReader(p, specs, grpTypes, aggTypes)
+    }
 }
 
 class DocStoreAggReader(part: DocStoreAggPartition, specs: Seq[DocStore.AggSpec],

@@ -78,8 +78,9 @@ object ParquetDirSource {
   /** The schema `spark.read.parquet(path)` infers, read from the footer
     * its inference would touch: with schema merging off, Spark takes
     * `_common_metadata`, then `_metadata`, then the first data file in
-    * path order, skipping names that start with `_` or `.`. The footer
-    * is converted by Spark's own converter over the session conf, so
+    * path order, skipping the names Spark's own file listing skips
+    * (`CatalystBridge.isHiddenPathName`). The footer is converted by
+    * Spark's own converter over the session conf, so
     * `nanosAsLong`, NTZ inference and binary-as-string apply exactly as
     * in inference, and opened over the context's Hadoop conf (no new
     * `Configuration`, whose parse dominates a footer read). None where
@@ -87,7 +88,8 @@ object ParquetDirSource {
     * read, or subdirectories (partition discovery) — so any error
     * stays Spark's own. */
   def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val sqlConf = org.apache.spark.sql.graftshim.CatalystBridge.sqlConf(spark)
+    import org.apache.spark.sql.graftshim.CatalystBridge
+    val sqlConf = CatalystBridge.sqlConf(spark)
     if (sqlConf.isParquetSchemaMergingEnabled) return None
     val hconf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
@@ -97,7 +99,8 @@ object ParquetDirSource {
       case None => return None
       case Some(st) if st.isFile => Seq(st)
       case Some(_) =>
-        val visible = fs.listStatus(root).toSeq.filter(f => keep(f.getPath.getName))
+        val visible = fs.listStatus(root).toSeq
+          .filterNot(f => CatalystBridge.isHiddenPathName(f.getPath.getName))
         if (visible.exists(_.isDirectory)) return None
         visible.sortBy(_.getPath.toString)
     }
@@ -114,14 +117,6 @@ object ParquetDirSource {
           new ParquetToSparkSchemaConverter(sqlConf))
       }
   }
-
-  // Spark's listing filter: hidden and `_`-prefixed names are skipped,
-  // except the two summary files and `_k=v`-style partition directories
-  private def keep(name: String): Boolean =
-    name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ||
-      name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE) ||
-      !((name.startsWith("_") && !name.contains("=")) ||
-        name.startsWith(".") || name.endsWith("._COPYING_"))
 }
 
 /** MongoDB source via the Spark MongoDB connector (the production path

@@ -31,6 +31,13 @@ object CatalystBridge {
   def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
 
+  /** Spark's file-listing rule: true for names a file index skips
+    * (hidden, `_`-prefixed except the Parquet summary files and
+    * `_k=v` directories, in-flight copies). `HadoopFSUtils` is
+    * private[spark]. */
+  def isHiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Block until every queued listener-bus event has been delivered —
     * QueryExecutionListener callbacks are asynchronous, so a metrics
     * reader that runs right after an action needs this barrier

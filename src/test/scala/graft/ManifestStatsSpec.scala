@@ -95,6 +95,26 @@ class ManifestStatsSpec extends SparkSpec {
       s"metadata-only aggregate consulted footers: $consulted")
   }
 
+  test("a manifest-answered aggregate plans one task; footer-read files keep one each") {
+    import spark.implicits._
+    def partitions(store: String): (Int, Long) = {
+      val df = spark.read.format("docstore").option("path", store).load().agg(count(lit(1)))
+      val scan = df.queryExecution.sparkPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+      }.get
+      assert(scan.isInstanceOf[graft.sources.DocStoreAggScan], scan.description())
+      (scan.toBatch.planInputPartitions().length, df.head.getLong(0))
+    }
+    assert(partitions(mkStore("mone")) == ((1, 300L)))
+    // a plain store carries no manifest stats: each footer is read by its own task
+    val plain = tmpDir("mplain")
+    Seq(0, 100, 200).foreach { base =>
+      (base until base + 100).map(_.toLong).toDF("k").coalesce(1)
+        .write.format("docstore").option("path", plain).mode("append").save()
+    }
+    assert(partitions(plain) == ((3, 300L)))
+  }
+
   test("count(col) answers null counts from the manifest; all-null and evolved columns stay exact") {
     import spark.implicits._
     val store = tmpDir("mnulls")
